@@ -104,8 +104,12 @@ def flag_zscore(
     stats_aggs = [F.avg(v).alias("_zs_mean"),
                   F.nullif(F.stddev_pop(v), F.lit(0.0)).alias("_zs_sd")]
     if parts:
-        stats = df.groupBy(*parts).agg(*stats_aggs)
-        out = df.join(F.broadcast(stats), parts, "left")
+        # null-safe join keys: a NULL key or group is a group of its own
+        # (pandas groupby(dropna=False)), not a row that loses its stats
+        stats = df.groupBy(*parts).agg(*stats_aggs).select(
+            *[F.col(c).alias(f"_zs_{c}") for c in parts], "_zs_mean", "_zs_sd")
+        on = [F.col(c).eqNullSafe(F.col(f"_zs_{c}")) for c in parts]
+        out = df.join(F.broadcast(stats), on, "left").drop(*[f"_zs_{c}" for c in parts])
     else:
         out = df.crossJoin(F.broadcast(df.agg(*stats_aggs)))
     z = F.abs((v - F.col("_zs_mean")) / F.col("_zs_sd"))

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,6 +141,9 @@ def run_pipeline(
     for tier in TIER_CHAIN + (["packed"] if pack_tier else []):
         try:
             metrics["rows"][tier] = spark.read.parquet(tier_path(out_dir, tier)).count()
-        except Exception:
+        except AnalysisException as exc:
+            # a tier never written, or one whose every day retention dropped
+            if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
             metrics["rows"][tier] = 0
     return metrics

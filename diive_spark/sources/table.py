@@ -18,10 +18,17 @@ explicit and testable as far as the environment allows:
   but no Iceberg catalog is configured, the failure is wrapped with the
   exact config the cluster needs instead of a bare catalog error.
 
-Retention (the 1m/1h/1d tier contract) maps to Iceberg as partition drops:
-``expire_tier_before`` issues the ``DELETE WHERE window_start < cutoff``
-that Iceberg turns into metadata-only partition drops on a
-days-partitioned table; on the parquet layout it rewrites (documented).
+Retention (the 1m/1h/1d tier contract) is a partition drop on both
+layouts. On an Iceberg table ``expire_tier_before`` issues the
+``DELETE WHERE window_start < cutoff`` that Iceberg turns into metadata-only
+partition drops on a days-partitioned table. On the parquet layout every
+tier writer (``run_pipeline``, ``write_tier_table``) partitions by
+``event_date = to_date(window_start)`` in the session time zone, so expiry
+deletes whole ``event_date=<d>`` directories through the Hadoop FileSystem:
+a midnight cutoff reads no data and launches no Spark job, and only the day
+straddling a cutoff off midnight is rewritten, swapped in from a hidden
+sibling. The deletes are idempotent and a swap cut short is settled by the
+next call, so re-running after a crash equals a clean expiry.
 """
 
 from __future__ import annotations
@@ -139,6 +146,40 @@ def write_tier_table(
                       mode=mode)
 
 
+def _settle_swaps(fs, Path, root) -> None:
+    """Finish or undo the straddle swaps of :func:`expire_tier_before` under
+    ``root``: a day whose rewrite is not installed gets its whole old
+    directory back, and every other leftover is deleted."""
+    for st in fs.globStatus(Path(root, "_expire_*")):
+        name = st.getPath().getName()
+        day_dir = Path(root, "event_date=" + name.rsplit("_", 1)[1])
+        if name.startswith("_expire_old_") and not fs.exists(day_dir):
+            fs.rename(st.getPath(), day_dir)
+        else:
+            fs.delete(st.getPath(), True)
+
+
+def _tier_days(spark: SparkSession, target: str):
+    """A parquet tier's Hadoop FS handles and its ``{date: event_date dir}``
+    map, after settling any swap a crash cut short. Raises ``ValueError``
+    when the tier is not partitioned into ``event_date=`` directories."""
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    root = Path(target.rstrip("/"))
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    _settle_swaps(fs, Path, root)
+    days = {}
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if not (st.isDirectory() and name.startswith("event_date=")):
+            raise ValueError(f"{target} is not a tier partitioned into "
+                             f"event_date= directories (found {name!r})")
+        days[name[len("event_date="):]] = st.getPath()
+    return fs, Path, root, days
+
+
 def expire_tier_before(
     spark: SparkSession, target: str, ts_col: str, cutoff: str,
 ) -> None:
@@ -146,8 +187,15 @@ def expire_tier_before(
 
     On an Iceberg table this DELETE aligns with the days() partition spec,
     so the engine's retention tick is a metadata-only partition drop (no
-    data rewrite). On the parquet layout the date directories make the same
-    statement a pruned overwrite (documented cost)."""
+    data rewrite). On the parquet layout it deletes the ``event_date=<d>``
+    directories before the cutoff's date, so ``ts_col`` must be the column
+    ``event_date`` was derived from, in the session time zone. Only a cutoff
+    off midnight rewrites data: the one day that straddles it."""
+    import pandas as _pd
+    try:
+        cutoff_ts = _pd.Timestamp(cutoff)
+    except (ValueError, TypeError) as exc:
+        raise ValueError(f"cutoff {cutoff!r} is not a timestamp") from exc
     is_ident, target = resolve_source(target)
     if is_ident:
         # Validate the interpolated pieces before building the statement:
@@ -156,11 +204,6 @@ def expire_tier_before(
         # cutoff fails here with a clear error instead of inside the DELETE,
         # and an untrusted one cannot smuggle SQL.
         import re
-        import pandas as _pd
-        try:
-            cutoff_ts = _pd.Timestamp(cutoff)
-        except (ValueError, TypeError) as exc:
-            raise ValueError(f"cutoff {cutoff!r} is not a timestamp") from exc
         ident = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
         if not ident.match(ts_col):
             raise ValueError(f"ts_col {ts_col!r} is not a plain identifier")
@@ -172,29 +215,23 @@ def expire_tier_before(
             f"DELETE FROM {quoted} WHERE `{ts_col}` < TIMESTAMP "
             f"'{cutoff_ts.isoformat(sep=' ')}'")
         return
-    from diive_spark.plans.partitioning import write_partitioned
-
-    # NEVER overwrite the directory being read (a lost cached partition
-    # would recompute from deleted files): write the survivors to a sibling
-    # temp dir in the SAME canonical range+date layout, then swap via
-    # Hadoop FS renames (metadata ops) — crash before the final rename
-    # leaves the original tier intact.
-    tmp = target.rstrip("/") + "._retention_tmp"
-    old_dir = target.rstrip("/") + "._retention_old"
-    kept = spark.read.parquet(target).filter(
-        F.col(ts_col) >= F.lit(cutoff).cast("timestamp"))
-    write_partitioned(kept, tmp, ts_col)
-    sc = spark.sparkContext
-    hconf = sc._jsc.hadoopConfiguration()
-    Path = sc._jvm.org.apache.hadoop.fs.Path
-    fs = Path(target).getFileSystem(hconf)
-    if fs.exists(Path(old_dir)):
-        fs.delete(Path(old_dir), True)
-    if not fs.rename(Path(target.rstrip("/")), Path(old_dir)):
-        raise RuntimeError(f"retention swap failed renaming {target}")
-    if not fs.rename(Path(tmp), Path(target.rstrip("/"))):
-        # restore the original tier before failing
-        fs.rename(Path(old_dir), Path(target.rstrip("/")))
-        raise RuntimeError(f"retention swap failed installing {tmp}")
-    fs.delete(Path(old_dir), True)
-
+    if cutoff_ts.tzinfo is not None:
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        cutoff_ts = cutoff_ts.tz_convert(tz).tz_localize(None)
+    fs, Path, root, days = _tier_days(spark, target)
+    cut_day = cutoff_ts.date().isoformat()
+    for day in days:
+        if day < cut_day:
+            fs.delete(days[day], True)
+    if cut_day in days and cutoff_ts != cutoff_ts.normalize():
+        # survivors go under a '_' name without '=', which Spark's reader
+        # skips; a failure anywhere leaves the whole old day in place
+        new, old = (Path(root, f"_expire_{s}_{cut_day}") for s in ("new", "old"))
+        try:
+            spark.read.parquet(str(days[cut_day])).filter(
+                F.col(ts_col) >= F.lit(str(cutoff_ts)).cast("timestamp")
+            ).write.parquet(str(new))
+            if not (fs.rename(days[cut_day], old) and fs.rename(new, days[cut_day])):
+                raise RuntimeError(f"retention swap of {days[cut_day]} failed")
+        finally:
+            _settle_swaps(fs, Path, root)

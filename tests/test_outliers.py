@@ -70,6 +70,30 @@ def test_zscore_global_matches_numpy(noisy):
     assert (got == 2).sum() > 0
 
 
+def test_zscore_null_group_keeps_its_flags(spark):
+    # a NULL series / day-night group is a group of its own, as in pandas
+    # groupby(dropna=False); a plain-equality join-back lost its stats
+    rng = np.random.default_rng(7)
+    vals = rng.normal(0, 1, 120)
+    vals[30] = 40.0   # outlier in the NULL series
+    vals[90] = 40.0   # outlier in series "a"
+    pdf = pd.DataFrame({
+        "i": range(120),
+        "series": [None] * 60 + ["a"] * 60,
+        "daytime": ([None] * 30 + [1] * 30) * 2,
+        "value": vals,
+    })
+    df = spark.createDataFrame(pdf, "i long, series string, daytime int, value double")
+    for groups in (None, ["daytime"]):
+        got = (outliers.flag_zscore(df, ["series"], "value", 4.0, group_cols=groups)
+               .orderBy("i").toPandas()["FLAG_ZSCORE_TEST"])
+        g = pdf.groupby(["series", *(groups or [])], dropna=False)["value"]
+        z = ((pdf["value"] - g.transform("mean")) / g.transform(lambda s: s.std(ddof=0))).abs()
+        expect = np.where(z > 4.0, 2, 0)
+        assert (got.to_numpy() == expect).all(), groups
+        assert got[30] == 2 and got[90] == 2
+
+
 def test_zscore_rolling_matches_pandas(noisy):
     df, pdf = noisy
     got = (
