@@ -15,7 +15,7 @@ spark.sparkContext.setLogLevel("ERROR")
 raw = synth.inject_gaps(synth.with_event_time(synth.token_table(spark, 20_000)))
 out = tempfile.mkdtemp(prefix="rollup_example_")
 metrics = pipeline.run_pipeline(spark, raw, out, batch_size=10)
-print("tier rows:", metrics["rows"])
+print("rows written per tier:", metrics["rows"])
 print("tiers written under:", out)
 
 # resume is a no-op when everything is done
