@@ -11,9 +11,12 @@ driver surface.
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
+import weakref
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -22,17 +25,28 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from diive_spark import queries as q  # noqa: E402
 from diive_spark.operators import gapfill, grid, resample  # noqa: E402
+from diive_spark.session import DAEMON_MODULE  # noqa: E402
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
+#: SparkContexts _ensure_shipped has seen: their workers import the checkout,
+#: or the zip was shipped to them (or could not be)
+_shipped: weakref.WeakSet = weakref.WeakSet()
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
     """Ship the package to executor Python workers regardless of how the
     caller's SparkSession was created (its workers only see diive_spark if
-    launched from this repo's cwd or with --py-files). Safe to call often."""
+    launched from this repo's cwd or with --py-files). Safe to call often:
+    a session whose workers run the ``diive_spark._pydaemon`` daemon already
+    imports the checkout, and any other SparkContext gets the zip once."""
+    sc = spark.sparkContext
+    if sc in _shipped:
+        return
+    _shipped.add(sc)
+    if sc.getConf().get("spark.python.daemon.module") == DAEMON_MODULE:
+        return
+    zip_path = os.path.join(_REPO, "dist", "diive_spark.zip")
     try:
-        import subprocess
-        zip_path = os.path.join(_REPO, "dist", "diive_spark.zip")
         # rebuild when missing OR stale (any package source newer than the
         # zip): a stale zip would ship old module code to executor workers
         # while the driver pickles kernels referencing the new one
@@ -47,8 +61,8 @@ def _ensure_shipped(spark: SparkSession) -> None:
                 capture_output=True, timeout=60,
             )
         if os.path.exists(zip_path):
-            spark.sparkContext.addPyFile(zip_path)
-    except Exception:
+            sc.addPyFile(zip_path)
+    except (OSError, subprocess.SubprocessError, Py4JError):
         pass  # already added, or workers can import via cwd/PYTHONPATH anyway
 
 

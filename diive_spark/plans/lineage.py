@@ -25,6 +25,19 @@ no files (an in-memory frame) has no fingerprint: its dates come from a
 before these columns existed reads them as null, so its dates recompute
 once. Not handled: the table is never compacted (one file per commit), and
 a date no raw file covers any more keeps its stored tiers.
+
+I/O. ``pending``, ``done_partitions`` and ``commit`` read and write the
+table with pyarrow, not with Spark jobs: a batch's lineage is a few dozen
+rows, and a Spark job costs more than the rows. Files are read against
+``ARROW_SCHEMA``, so a file without the newer columns reads them as null.
+``commit`` writes its rows to a hidden ``.part-<uuid>.parquet`` and
+``os.replace``s it to ``part-<uuid>.parquet``: a commit appears whole or
+not at all, and a temp file a crash left behind is skipped by both pyarrow
+and Spark readers, which ignore names starting with ``.`` or ``_``. The
+rename is atomic against a crash of the process, not of the host (no
+fsync). ``read()`` still returns a Spark DataFrame, over files written by
+either engine. The lineage path must be a local directory, as the
+``os.path.exists`` checks here assume.
 """
 
 from __future__ import annotations
@@ -34,7 +47,9 @@ import os
 import time
 import uuid
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,7 +61,11 @@ LINEAGE_SCHEMA = (
     "query_text string, input_fingerprint string, file_size bigint, "
     "file_mtime_ns bigint, first_date date, last_date date"
 )
-_LINEAGE_COLS = [f.split(" ")[0] for f in LINEAGE_SCHEMA.split(", ")]
+_ARROW_TYPES = {"string": pa.string(), "bigint": pa.int64(), "double": pa.float64(),
+                "date": pa.date32()}
+#: LINEAGE_SCHEMA as pyarrow reads and writes it
+ARROW_SCHEMA = pa.schema([(name, _ARROW_TYPES[t]) for name, t in
+                          (f.split(" ") for f in LINEAGE_SCHEMA.split(", "))])
 #: ``tier`` of the raw-file manifest rows
 MANIFEST_TIER = "raw"
 _NEVER = object()
@@ -73,43 +92,43 @@ class LineageStore:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
+    def _rows(self, where: ds.Expression, columns: list[str]) -> list[dict]:
+        """The ``columns`` of the rows matching ``where``, read with pyarrow."""
+        if not os.path.exists(self.path):
+            return []
+        return (ds.dataset(self.path, format="parquet", schema=ARROW_SCHEMA)
+                .to_table(columns=columns, filter=where).to_pylist())
+
     def done_partitions(self, tier: str) -> set[str]:
-        rows = (
-            self.read()
-            .filter((F.col("tier") == tier) & (F.col("status") == "done"))
-            .select("partition_id")
-            .collect()
-        )
+        rows = self._rows((ds.field("tier") == tier) & (ds.field("status") == "done"),
+                          ["partition_id"])
         return {r["partition_id"] for r in rows}
 
     def commit(self, records: list[dict]) -> None:
-        """Append lineage rows (one parquet file per commit — the atomic unit).
-        Fields a record leaves out (e.g. query_text) are null."""
+        """Append lineage rows as one new parquet file, the atomic unit (see
+        the module docstring). Fields a record leaves out (e.g. query_text)
+        are null."""
         if not records:
             return
-        # object columns: a bigint (checksum, mtime in ns) that some records
-        # leave null must not pass through float64
-        pdf = pd.DataFrame({c: pd.Series([r.get(c) for r in records], dtype=object)
-                            for c in _LINEAGE_COLS})
-        pdf["committed_at"] = time.time()
-        (
-            self.spark.createDataFrame(pdf, schema=LINEAGE_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
-        )
+        now = time.time()
+        table = pa.Table.from_pylist([{**r, "committed_at": now} for r in records],
+                                     schema=ARROW_SCHEMA)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}")
+        # readers apply ARROW_SCHEMA: the Arrow schema blob (about 1 KB a
+        # file) would only add bytes
+        pq.write_table(table, tmp, store_schema=False)
+        os.replace(tmp, os.path.join(self.path, name))
 
     def pending(self, raw: DataFrame, ts_col: str, tier: str) -> Pending:
         """The event dates of ``raw`` whose ``tier`` output is missing or
         stale (see the module docstring)."""
-        rows = (
-            self.read()
-            .filter(((F.col("tier") == tier) & (F.col("status") == "done"))
-                    | (F.col("tier") == MANIFEST_TIER))
-            .select("partition_id", "tier", "committed_at", "input_fingerprint", "n_rows",
-                    "file_size", "file_mtime_ns", "first_date", "last_date")
-            .collect()
-        ) if os.path.exists(self.path) else []  # no lineage yet: no Spark job
+        rows = self._rows(
+            ((ds.field("tier") == tier) & (ds.field("status") == "done"))
+            | (ds.field("tier") == MANIFEST_TIER),
+            ["partition_id", "tier", "committed_at", "input_fingerprint", "n_rows",
+             "file_size", "file_mtime_ns", "first_date", "last_date"])
         latest, cached = {}, {}
         for r in sorted(rows, key=lambda r: r["committed_at"]):
             if r["tier"] == MANIFEST_TIER:

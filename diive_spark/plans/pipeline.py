@@ -21,9 +21,26 @@ Physical plan (SURVEY.md §4.3):
 - 1h and 1d tiers re-aggregate the batch's 1m partitions, read back by their
   ``event_date=<d>`` paths — raw data is scanned exactly once per partition.
   The lineage checksum is one aggregate over those same 1m rows.
+- After the 1m write and its footer counts, four jobs that only read the
+  batch's 1m partitions run at the same time from a small thread pool: the
+  checksum collect, the 1h write, the 1d write (chained from the 1h plan,
+  so it recomputes 1h rather than reading it back) and the packed write.
+  Their fixed per-job costs overlap instead of adding up. Each thread runs
+  under the caller's local properties and session tags
+  (``inheritable_thread_target``), so a caller's job group or scheduler
+  pool covers them. The run waits for all four, then raises the first
+  error in that order; a failed batch commits no lineage row, and the
+  tiers its finished jobs wrote are overwritten when it replays. Batches
+  run one after another.
 - Outputs land under ``out/tier=<t>/event_date=<d>/`` and are idempotently
   overwritten on replay; the lineage row commits AFTER the output write, so
   kill-at-any-point replays only unfinished dates (tests/test_pipeline.py).
+- ``metrics["stage_s"]`` holds the wall seconds of each stage, summed over
+  batches: ``pending``, ``1m`` (write and footer counts), each overlapped
+  job (``checksum``, ``1h``, ``1d``, ``packed``), ``overlap`` (the section
+  that runs them, shorter than their sum when they overlap) and
+  ``commit``. The engine measures them itself because a tracer that keeps
+  one stack of open spans cannot attribute jobs that run concurrently.
 - Counts come from the parquet footers of the partitions a batch wrote, so
   no tier is read back to be counted; ``metrics["rows"]`` is the rows this
   run wrote, per tier. (``DataFrame.observe`` with an ``Observation`` is
@@ -36,11 +53,15 @@ from __future__ import annotations
 import functools
 import operator
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
+from pyspark.util import inheritable_thread_target
 
 from diive_spark.compression import gorilla
 from diive_spark.operators import resample
@@ -82,6 +103,40 @@ def _write(df: DataFrame, out_dir: str, tier: str) -> None:
     ).parquet(tier_path(out_dir, tier))
 
 
+def _write_packed(t1m: DataFrame, out_dir: str, key_cols: list[str], value_col: str) -> None:
+    """Gorilla-pack ``value_col`` of the 1m rows into one block per (key,
+    day) and overwrite those days of the packed tier."""
+    # block on window_START so blocks align with the event_date batching:
+    # the 23:59 window's END is midnight of d+1, which would land the day's
+    # last point in a partition a later batch dynamically overwrites
+    packed = gorilla.pack_blocks(
+        t1m.withColumn("_k", F.concat_ws("|", *key_cols) if key_cols else F.lit("all")),
+        ["_k"], "window_start", value_col, block_seconds=86400,
+    ).withColumnRenamed("_k", "series_key")
+    _write(packed.withColumn(
+        "event_date", F.to_date(F.timestamp_seconds(F.col("block_id") * 86400))
+    ), out_dir, "packed")
+
+
+def _concurrently(spark: SparkSession, jobs: dict[str, Callable[[], Any]]
+                  ) -> dict[str, tuple[Any, float]]:
+    """Run ``jobs`` at the same time, one thread each, under the caller's
+    Spark local properties (job group, scheduler pool) and session tags.
+    Waits for every job to end, then raises the first error in ``jobs``
+    order. Returns {name: (result, wall seconds)}."""
+    def timed(fn):
+        t0 = time.perf_counter()
+        out = fn()
+        return out, time.perf_counter() - t0
+
+    # one wrapper per job: each gets its own copy of the local properties,
+    # which Spark SQL then sets its execution id in
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = {name: pool.submit(inheritable_thread_target(spark)(timed), fn)
+                   for name, fn in jobs.items()}
+    return {name: f.result() for name, f in futures.items()}
+
+
 def _rows(out_dir: str, tier: str, dates: list[str]) -> dict[str, int]:
     """{date: rows} of ``tier``'s event_date partitions, from their parquet
     footers; 0 for a partition that does not exist."""
@@ -110,7 +165,8 @@ def run_pipeline(
     """Process all pending event-dates through the 3-tier cascade.
 
     Returns metrics dict: rows this run wrote per tier, dates covered and
-    dates replayed. ``fail_after_batches`` simulates a kill for the resume
+    dates replayed, seconds per stage (``stage_s``, see the module
+    docstring). ``fail_after_batches`` simulates a kill for the resume
     test.
     """
     value_cols = value_cols or ["n_tok"]
@@ -118,13 +174,17 @@ def run_pipeline(
     store = LineageStore(spark, f"{out_dir}/_lineage")
     run_id = new_run_id()
 
+    t0 = time.perf_counter()
     todo = store.pending(raw, ts_col, TIER_CHAIN[0])
     tiers = TIER_CHAIN + (["packed"] if pack_tier else [])
+    stage_s = dict.fromkeys(["pending", "1m", "checksum", *tiers[1:], "overlap", "commit"], 0.0)
+    stage_s["pending"] = time.perf_counter() - t0
     metrics = {
         "run_id": run_id,
         "n_partitions_total": todo.n_total,
         "n_partitions_pending": len(todo.dates),
         "rows": dict.fromkeys(tiers, 0),
+        "stage_s": stage_s,
     }
 
     stat_cols = [f"{v}_{p}" for v in value_cols for p in resample.PARTIAL_COLS]
@@ -134,7 +194,7 @@ def run_pipeline(
     for bi, batch in enumerate(batches):
         if fail_after_batches is not None and bi >= fail_after_batches:
             raise KilledForTest(f"simulated kill before batch {bi}")
-        t0 = time.time()
+        t_batch, t0 = time.time(), time.perf_counter()
         t1m = resample.rollup(
             _slab(raw, ts_col, batch), ts_col, value_cols, "1m", key_cols=key_cols,
             mincounts_perc=mincounts_perc,
@@ -142,6 +202,7 @@ def run_pipeline(
         _write(t1m, out_dir, "1m")
         n_rows = _rows(out_dir, "1m", batch)
         metrics["rows"]["1m"] += sum(n_rows.values())
+        stage_s["1m"] += time.perf_counter() - t0
 
         written = [d for d in batch if n_rows[d]]
         checksums = {}
@@ -150,35 +211,30 @@ def run_pipeline(
             # the known schema spares a footer-reading job
             t1m_back = spark.read.schema(t1m.schema).option("basePath", base).parquet(
                 *[f"{base}/event_date={d}" for d in written])
-            checksums = {
-                str(r["event_date"]): r["checksum"]
-                for r in t1m_back.groupBy("event_date").agg(checksum_expr(stat_cols)).collect()
-            }
+            jobs = {"checksum": lambda: t1m_back.groupBy("event_date")
+                    .agg(checksum_expr(stat_cols)).collect()}
             prev = t1m_back
             for tier in TIER_CHAIN[1:]:
-                t = resample.reaggregate(prev, tier, value_cols, key_cols=key_cols).withColumn(
-                    "event_date", F.to_date("window_start")
-                )
-                _write(t, out_dir, tier)
-                prev = t
-
+                # chained from the previous tier's plan, not its files
+                prev = resample.reaggregate(prev, tier, value_cols, key_cols=key_cols
+                                            ).withColumn("event_date", F.to_date("window_start"))
+                jobs[tier] = functools.partial(_write, prev, out_dir, tier)
             if pack_tier:
-                # block on window_START so blocks align with the event_date
-                # batching: the 23:59 window's END is midnight of d+1, which
-                # would land the day's last point in a partition a later batch
-                # dynamically overwrites
-                packed = gorilla.pack_blocks(
-                    t1m_back.withColumn("_k", F.concat_ws("|", *key_cols) if key_cols else F.lit("all")),
-                    ["_k"], "window_start", f"{value_cols[0]}_mean", block_seconds=86400,
-                ).withColumnRenamed("_k", "series_key")
-                _write(packed.withColumn(
-                    "event_date", F.to_date(F.timestamp_seconds(F.col("block_id") * 86400))
-                ), out_dir, "packed")
+                jobs["packed"] = functools.partial(_write_packed, t1m_back, out_dir,
+                                                   key_cols, f"{value_cols[0]}_mean")
+
+            t0 = time.perf_counter()
+            done = _concurrently(spark, jobs)
+            stage_s["overlap"] += time.perf_counter() - t0
+            for name, (_, secs) in done.items():
+                stage_s[name] += secs
+            checksums = {str(r["event_date"]): r["checksum"] for r in done["checksum"][0]}
             for tier in tiers[1:]:
                 metrics["rows"][tier] += sum(_rows(out_dir, tier, written).values())
 
         # lineage AFTER outputs: crash before this line -> batch replays
-        elapsed = time.time() - t0
+        elapsed = time.time() - t_batch
+        t0 = time.perf_counter()
         store.commit([
             {
                 "partition_id": d,
@@ -192,4 +248,5 @@ def run_pipeline(
             }
             for d in batch
         ] + (manifest_rows if bi == 0 else []))
+        stage_s["commit"] += time.perf_counter() - t0
     return metrics

@@ -1,0 +1,118 @@
+"""The jobs after the 1m write (checksum, 1h, 1d and packed writes) run
+concurrently: the run reports each stage's seconds, a failed job surfaces
+only after its siblings ended and leaves a batch that replays to a clean
+store, and every job runs under the caller's Spark job group."""
+
+import os
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pytest
+
+from diive_spark.compression import gorilla
+from diive_spark.plans import pipeline
+from diive_spark.plans.lineage import LineageStore
+
+TIERS = ["1m", "1h", "1d", "packed"]
+
+
+def _raw_days(raw_dir, days):
+    os.makedirs(raw_dir, exist_ok=True)
+    for i, day in enumerate(days):
+        ts = pd.date_range(day, periods=144, freq="10min")
+        rng = np.random.default_rng(i)
+        pq.write_table(pa.table({
+            "event_time": pa.array(ts.values.astype("datetime64[us]"), pa.timestamp("us", tz="UTC")),
+            "n_tok": pa.array(rng.integers(1, 1000, len(ts)), pa.int64()),
+            "source": pa.array(np.where(np.arange(len(ts)) % 2, "web", "code")),
+        }), os.path.join(raw_dir, f"part-{day}.parquet"))
+
+
+def _run(spark, raw_dir, out, **kwargs):
+    return pipeline.run_pipeline(spark, spark.read.parquet(raw_dir), out, **kwargs)
+
+
+def _tier(out, tier):
+    pdf = ds.dataset(pipeline.tier_path(out, tier), format="parquet",
+                     partitioning="hive").to_table().to_pandas()
+    keys = [c for c in ["source", "series_key", "window_start", "block_id"] if c in pdf.columns]
+    return pdf.assign(event_date=pdf["event_date"].astype(str)).sort_values(keys).reset_index(drop=True)
+
+
+def _latest_lineage(spark, out):
+    lin = LineageStore(spark, f"{out}/_lineage").read().toPandas()
+    lin = lin[lin["tier"] == "1m"].sort_values("committed_at").groupby("partition_id").tail(1)
+    return lin.set_index("partition_id")[["n_rows", "checksum", "input_fingerprint"]].sort_index()
+
+
+def test_stage_seconds_cover_every_stage(spark, tmp_path):
+    raw_dir = str(tmp_path / "raw")
+    _raw_days(raw_dir, ["2024-01-01", "2024-01-02"])
+    m = _run(spark, raw_dir, str(tmp_path / "store"), batch_size=1)
+    stage_s = m["stage_s"]
+    assert set(stage_s) == {"pending", "1m", "checksum", "1h", "1d", "packed", "overlap", "commit"}
+    assert all(v >= 0 for v in stage_s.values()), stage_s
+    assert stage_s["overlap"] > 0
+
+    m = _run(spark, raw_dir, str(tmp_path / "unpacked"), pack_tier=None)
+    assert set(m["stage_s"]) == {"pending", "1m", "checksum", "1h", "1d", "overlap", "commit"}
+
+
+@pytest.mark.parametrize("failing", ["packed", "checksum"])
+def test_failed_job_waits_for_its_siblings_and_the_batch_replays(
+        spark, tmp_path, monkeypatch, failing):
+    """The packed write is the last job submitted, the checksum the first."""
+    raw_dir = str(tmp_path / "raw")
+    days = ["2024-01-01", "2024-01-02", "2024-01-03"]
+    _raw_days(raw_dir, days)
+    clean, resume = str(tmp_path / "clean"), str(tmp_path / "resume")
+    _run(spark, raw_dir, clean, batch_size=2)
+
+    owner, name = (gorilla, "pack_blocks") if failing == "packed" else (pipeline, "checksum_expr")
+    calls, orig = [], getattr(owner, name)
+
+    def fail_second(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:  # the second batch's job fails before any Spark job
+            raise RuntimeError(f"{failing} failed")
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, fail_second)
+    with pytest.raises(RuntimeError, match=f"{failing} failed"):
+        _run(spark, raw_dir, resume, batch_size=2)
+    # the sibling jobs of the failed one ran to their end before the raise
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    for tier in {"1h", "1d", "packed"} - {failing}:
+        assert os.path.isdir(f"{pipeline.tier_path(resume, tier)}/event_date=2024-01-03"), tier
+    # ... and the failed batch committed no lineage row
+    assert LineageStore(spark, f"{resume}/_lineage").done_partitions("1m") == set(days[:2])
+
+    monkeypatch.undo()
+    m = _run(spark, raw_dir, resume, batch_size=2)
+    assert m["n_partitions_pending"] == 1
+    for tier in TIERS:
+        a, b = _tier(clean, tier), _tier(resume, tier)
+        assert len(a) > 0, tier
+        pd.testing.assert_frame_equal(a, b, obj=tier)
+    pd.testing.assert_frame_equal(_latest_lineage(spark, clean), _latest_lineage(spark, resume))
+
+
+def test_overlapped_jobs_run_under_the_callers_job_group(spark, tmp_path):
+    raw_dir = str(tmp_path / "raw")
+    _raw_days(raw_dir, ["2024-01-01", "2024-01-02"])
+    raw = spark.read.parquet(raw_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-caller", "a caller's job group")
+    try:
+        pipeline.run_pipeline(spark, raw, str(tmp_path / "store"), batch_size=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    # at least the 1m write and the four overlapped jobs of each batch
+    assert len(tracker.getJobIdsForGroup("pipeline-caller")) >= 2 * 5
