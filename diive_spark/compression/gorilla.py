@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from diive_spark.operators.halo import exchange_width
+
 # ---------------------------------------------------------------------------
 # bit packing primitives (vectorized)
 # ---------------------------------------------------------------------------
@@ -350,9 +352,10 @@ def pack_blocks(
 ) -> DataFrame:
     """Pack a rollup tier into one binary row per (key, block): Gorilla
     timestamps + values, with raw/packed byte counts for compression-ratio
-    accounting. One shuffle on (key, block) — at the rollup tiers this is
-    tiny relative to raw data. ``value_dtype='float32'`` uses the half-width
-    XOR codec (bit-exact for float32-born values; lossy vs float64)."""
+    accounting. One shuffle, clustered on the block — at the rollup tiers
+    this is tiny relative to raw data. ``value_dtype='float32'`` uses the
+    half-width XOR codec (bit-exact for float32-born values; lossy vs
+    float64)."""
     blk = (F.unix_timestamp(F.col(ts_col)) / block_seconds).cast("bigint")
     src = df.select(
         *key_cols,
@@ -386,14 +389,15 @@ def pack_blocks(
         )
         return pd.DataFrame(row)
 
-    # explicit numbered repartition on the group key: the encode kernel is
-    # Python-CPU-bound, and AQE's size-based coalescing would fold a small
-    # tier's shuffle onto one partition, serialising every block through a
-    # single Python worker (see halo.apply_with_halo — same trap). At
-    # scale block count >> cores, so tasks stay full either way.
-    sc = df.sparkSession.sparkContext
-    src = src.repartition(max(sc.defaultParallelism, 1),
-                          *key_cols, "block_id")
+    # explicit numbered repartition: the encode kernel is Python-CPU-bound,
+    # and AQE's size-based coalescing would fold a small tier's shuffle
+    # onto one partition, serialising every block through a single Python
+    # worker (see halo.apply_with_halo — same trap). Clustered on the
+    # block alone, which still satisfies the (key, block) grouping: every
+    # key of a block lands in one task, so a partitioned write puts each
+    # block (a day, in run_pipeline) in one file. The price is that one
+    # block's keys encode in one Python worker.
+    src = src.repartition(exchange_width(src), "block_id")
     return src.groupBy(*key_cols, "block_id").applyInPandas(pack, schema=out_schema)
 
 

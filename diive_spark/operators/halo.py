@@ -23,6 +23,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def exchange_width(df: DataFrame) -> int:
+    """Partitions for an explicit exchange that feeds a Python kernel: the
+    cluster's parallelism, or ``df``'s own width when that is wider, so a
+    wide scan or checkpoint is not narrowed to the core count.
+
+    Only a plan without an exchange tells its width for free: building its
+    RDD runs no job and gives the scan splits or checkpoint partitions. A
+    plan with one runs under AQE, whose final width is known only after its
+    shuffle stages ran (``getNumPartitions`` would run them, and the
+    kernel's job again), so it gets the cluster's parallelism."""
+    sc = df.sparkSession.sparkContext
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return sc.defaultParallelism
+    return max(sc.defaultParallelism, df.rdd.getNumPartitions())
+
+
 def explode_halo_slabs(
     df: DataFrame, ts_col: str, slab_seconds: int, halo_seconds: int,
 ) -> DataFrame:
@@ -86,17 +103,14 @@ def apply_with_halo(
     (half_window_rows * tier_seconds).
     """
     expanded = explode_halo_slabs(df, ts_col, slab_seconds, halo_seconds)
-    # Pin the grouped-map exchange to cluster parallelism: the kernel is
-    # Python-CPU-bound per ROW, but AQE's size-based coalescing sees only
-    # its (tiny) shuffle BYTES and folds a small tier onto ONE partition,
-    # serialising every slab through a single Python worker (r8
-    # measurement: the whole sf1 gapfill cascade ran as a 1-task stage).
-    # An explicit numbered repartition is exempt from AQE coalescing and
-    # satisfies the groupBy's clustering, so no second exchange is added;
-    # at scale the slab count dwarfs any core count and tasks stay full.
-    sc = df.sparkSession.sparkContext
-    expanded = expanded.repartition(
-        max(sc.defaultParallelism, 1), *key_cols, "_slab")
+    # Number the grouped-map exchange: the kernel is Python-CPU-bound per
+    # ROW, but AQE's size-based coalescing sees only its (tiny) shuffle
+    # BYTES and folds a small tier onto ONE partition, serialising every
+    # slab through a single Python worker (r8 measurement: the whole sf1
+    # gapfill cascade ran as a 1-task stage). An explicit numbered
+    # repartition is exempt from AQE coalescing and satisfies the groupBy's
+    # clustering, so no second exchange is added.
+    expanded = expanded.repartition(exchange_width(df), *key_cols, "_slab")
 
     out_cols = [c.strip().split()[0] for c in output_schema.split(",")]
 

@@ -35,9 +35,12 @@ rows, and a Spark job costs more than the rows. Files are read against
 not at all, and a temp file a crash left behind is skipped by both pyarrow
 and Spark readers, which ignore names starting with ``.`` or ``_``. The
 rename is atomic against a crash of the process, not of the host (no
-fsync). ``read()`` still returns a Spark DataFrame, over files written by
-either engine. The lineage path must be a local directory, as the
-``os.path.exists`` checks here assume.
+fsync). Lineage files keep pyarrow's default snappy codec, not the tiers'
+gzip (``sources.table.TIER_CODEC``): a commit holds a few rows, and gzip's
+frame around each tiny page makes such a file about 10% larger. ``read()``
+still returns a Spark DataFrame, over files written by either engine. The
+lineage path must be a local directory, as the ``os.path.exists`` checks
+here assume.
 """
 
 from __future__ import annotations

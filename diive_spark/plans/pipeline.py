@@ -18,23 +18,32 @@ Physical plan (SURVEY.md §4.3):
   — the Zipf-skewed 'web' source is defused by the combine step (every map
   task pre-aggregates its own windows before the shuffle), plus AQE skew
   splitting for residual imbalance.
-- 1h and 1d tiers re-aggregate the batch's 1m partitions, read back by their
-  ``event_date=<d>`` paths — raw data is scanned exactly once per partition.
+- 1h and 1d tiers each re-aggregate the batch's 1m partitions, read back by
+  their ``event_date=<d>`` paths — raw data is scanned exactly once per
+  partition. The partials merge exactly, so 1d from 1m equals 1d from 1h.
   The lineage checksum is one aggregate over those same 1m rows.
 - After the 1m write and its footer counts, four jobs that only read the
   batch's 1m partitions run at the same time from a small thread pool: the
-  checksum collect, the 1h write, the 1d write (chained from the 1h plan,
-  so it recomputes 1h rather than reading it back) and the packed write.
-  Their fixed per-job costs overlap instead of adding up. Each thread runs
-  under the caller's local properties and session tags
-  (``inheritable_thread_target``), so a caller's job group or scheduler
-  pool covers them. The run waits for all four, then raises the first
-  error in that order; a failed batch commits no lineage row, and the
-  tiers its finished jobs wrote are overwritten when it replays. Batches
-  run one after another.
+  checksum collect and the 1h, 1d and packed writes. Their fixed per-job
+  costs overlap instead of adding up. Each thread runs under the caller's
+  local properties and session tags (``inheritable_thread_target``), so a
+  caller's job group or scheduler pool covers them. The run waits for all
+  four, then raises the first error in that order; a failed batch commits
+  no lineage row, and the tiers its finished jobs wrote are overwritten
+  when it replays. Batches run one after another.
 - Outputs land under ``out/tier=<t>/event_date=<d>/`` and are idempotently
   overwritten on replay; the lineage row commits AFTER the output write, so
   kill-at-any-point replays only unfinished dates (tests/test_pipeline.py).
+- A batch date the 1m write produced no rows for (a rewritten raw file whose
+  range still covers it) keeps no stale output: the dynamic overwrite
+  leaves such a partition alone, so the run compares the 1m files before
+  and after the write and deletes the dates the write did not replace from
+  every tier, 1m last so that a crash in between leaves them to the replay.
+- Layout (``sources.table.tier_writer``): every tier file is gzip-compressed
+  and sorted within its task by ``(event_date, *key_cols, window_start)``,
+  the packed tier by ``(event_date, series_key, block_id)``, the order the
+  readers filter in. The pack exchange is clustered on the block (one
+  block is one day), so the packed tier holds one file per date.
 - ``metrics["stage_s"]`` holds the wall seconds of each stage, summed over
   batches: ``pending``, ``1m`` (write and footer counts), each overlapped
   job (``checksum``, ``1h``, ``1d``, ``packed``), ``overlap`` (the section
@@ -66,6 +75,7 @@ from pyspark.util import inheritable_thread_target
 from diive_spark.compression import gorilla
 from diive_spark.operators import resample
 from diive_spark.plans.lineage import LineageStore, checksum_expr, new_run_id
+from diive_spark.sources.table import drop_tier_dates, tier_writer
 
 TIER_CHAIN = ["1m", "1h", "1d"]
 
@@ -96,11 +106,12 @@ def _slab(raw: DataFrame, ts_col: str, dates: list[str]) -> DataFrame:
     return raw.filter(cond)
 
 
-def _write(df: DataFrame, out_dir: str, tier: str) -> None:
-    """Overwrite ``df``'s event_date partitions of ``tier``."""
-    df.write.mode("overwrite").partitionBy("event_date").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(tier_path(out_dir, tier))
+def _write(df: DataFrame, out_dir: str, tier: str, sort_cols: list[str]) -> None:
+    """Overwrite ``df``'s event_date partitions of ``tier``, each file's rows
+    sorted by ``sort_cols``."""
+    tier_writer(df, ["event_date", *sort_cols]).mode("overwrite").partitionBy(
+        "event_date").option("partitionOverwriteMode", "dynamic").parquet(
+        tier_path(out_dir, tier))
 
 
 def _write_packed(t1m: DataFrame, out_dir: str, key_cols: list[str], value_col: str) -> None:
@@ -115,7 +126,7 @@ def _write_packed(t1m: DataFrame, out_dir: str, key_cols: list[str], value_col: 
     ).withColumnRenamed("_k", "series_key")
     _write(packed.withColumn(
         "event_date", F.to_date(F.timestamp_seconds(F.col("block_id") * 86400))
-    ), out_dir, "packed")
+    ), out_dir, "packed", ["series_key", "block_id"])
 
 
 def _concurrently(spark: SparkSession, jobs: dict[str, Callable[[], Any]]
@@ -137,17 +148,23 @@ def _concurrently(spark: SparkSession, jobs: dict[str, Callable[[], Any]]
     return {name: f.result() for name, f in futures.items()}
 
 
-def _rows(out_dir: str, tier: str, dates: list[str]) -> dict[str, int]:
-    """{date: rows} of ``tier``'s event_date partitions, from their parquet
-    footers; 0 for a partition that does not exist."""
-    rows = {}
+def _partitions(out_dir: str, tier: str, dates: list[str]) -> dict[str, ds.Dataset]:
+    """{date: dataset} of the ``tier`` event_date partitions of ``dates``
+    that exist."""
+    parts = {}
     for d in dates:
         try:
-            rows[d] = ds.dataset(f"{tier_path(out_dir, tier)}/event_date={d}",
-                                 format="parquet").count_rows()
+            parts[d] = ds.dataset(f"{tier_path(out_dir, tier)}/event_date={d}",
+                                  format="parquet")
         except FileNotFoundError:
-            rows[d] = 0
-    return rows
+            pass
+    return parts
+
+
+def _rows(out_dir: str, tier: str, dates: list[str]) -> int:
+    """Rows of ``tier``'s event_date partitions of ``dates``, from their
+    parquet footers."""
+    return sum(p.count_rows() for p in _partitions(out_dir, tier, dates).values())
 
 
 def run_pipeline(
@@ -188,6 +205,7 @@ def run_pipeline(
     }
 
     stat_cols = [f"{v}_{p}" for v in value_cols for p in resample.PARTIAL_COLS]
+    order = [*key_cols, "window_start"]
     manifest_rows = [{**r, "run_id": run_id} for r in todo.manifest]
 
     batches = [todo.dates[i:i + batch_size] for i in range(0, len(todo.dates), batch_size)]
@@ -199,12 +217,20 @@ def run_pipeline(
             _slab(raw, ts_col, batch), ts_col, value_cols, "1m", key_cols=key_cols,
             mincounts_perc=mincounts_perc,
         ).withColumn("event_date", F.to_date("window_start"))
-        _write(t1m, out_dir, "1m")
-        n_rows = _rows(out_dir, "1m", batch)
+        before = {d: set(p.files) for d, p in _partitions(out_dir, "1m", batch).items()}
+        _write(t1m, out_dir, "1m", order)
+        # a partition the dynamic overwrite did not replace keeps its old files
+        parts = {d: p for d, p in _partitions(out_dir, "1m", batch).items()
+                 if set(p.files) != before.get(d)}
+        written = [d for d in batch if d in parts]
+        lacking = [d for d in batch if d not in parts]
+        if lacking:  # 1m last: until it goes, a replay finds these dates lacking
+            for tier in [*TIER_CHAIN[1:], "packed", "1m"]:
+                drop_tier_dates(spark, tier_path(out_dir, tier), lacking)
+        n_rows = {d: parts[d].count_rows() if d in parts else 0 for d in batch}
         metrics["rows"]["1m"] += sum(n_rows.values())
         stage_s["1m"] += time.perf_counter() - t0
 
-        written = [d for d in batch if n_rows[d]]
         checksums = {}
         if written:  # a date with no rows has no 1m partition to read back
             base = tier_path(out_dir, "1m")
@@ -213,12 +239,10 @@ def run_pipeline(
                 *[f"{base}/event_date={d}" for d in written])
             jobs = {"checksum": lambda: t1m_back.groupBy("event_date")
                     .agg(checksum_expr(stat_cols)).collect()}
-            prev = t1m_back
             for tier in TIER_CHAIN[1:]:
-                # chained from the previous tier's plan, not its files
-                prev = resample.reaggregate(prev, tier, value_cols, key_cols=key_cols
-                                            ).withColumn("event_date", F.to_date("window_start"))
-                jobs[tier] = functools.partial(_write, prev, out_dir, tier)
+                agg = resample.reaggregate(t1m_back, tier, value_cols, key_cols=key_cols
+                                           ).withColumn("event_date", F.to_date("window_start"))
+                jobs[tier] = functools.partial(_write, agg, out_dir, tier, order)
             if pack_tier:
                 jobs["packed"] = functools.partial(_write_packed, t1m_back, out_dir,
                                                    key_cols, f"{value_cols[0]}_mean")
@@ -230,7 +254,7 @@ def run_pipeline(
                 stage_s[name] += secs
             checksums = {str(r["event_date"]): r["checksum"] for r in done["checksum"][0]}
             for tier in tiers[1:]:
-                metrics["rows"][tier] += sum(_rows(out_dir, tier, written).values())
+                metrics["rows"][tier] += _rows(out_dir, tier, written)
 
         # lineage AFTER outputs: crash before this line -> batch replays
         elapsed = time.time() - t_batch

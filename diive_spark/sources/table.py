@@ -29,12 +29,31 @@ a midnight cutoff reads no data and launches no Spark job, and only the day
 straddling a cutoff off midnight is rewritten, swapped in from a hidden
 sibling. The deletes are idempotent and a swap cut short is settled by the
 next call, so re-running after a crash equals a clean expiry.
+
+Tier file layout. ``tier_writer`` is the one writer of tier files
+(``run_pipeline``'s tiers and the straddling-day rewrite): rows sorted
+within each task by the tier's (keys, time) order, ``TIER_CODEC``-compressed
+column chunks. Sorted runs of one key and its timestamps compress far
+better than shuffle order, and each file's per-key min/max statistics stay
+tight for the (key, window_start) and ``block_id`` filters readers use.
+gzip rather than zstd: parquet's zstd streams have finalizers, so their
+garbage survives a single full GC, and a JVM heap reading taken after one
+runs high.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+#: parquet codec of every tier file
+TIER_CODEC = "gzip"
+
+
+def tier_writer(df: DataFrame, sort_cols: list[str]) -> DataFrameWriter:
+    """``df``'s writer in the tier layout (see the module docstring): rows
+    sorted within each task by ``sort_cols``, ``TIER_CODEC`` compression."""
+    return df.sortWithinPartitions(*sort_cols).write.option("compression", TIER_CODEC)
 
 
 def resolve_source(source: str) -> tuple[bool, str]:
@@ -159,14 +178,27 @@ def _settle_swaps(fs, Path, root) -> None:
             fs.delete(st.getPath(), True)
 
 
+def _hadoop_fs(spark: SparkSession, target: str):
+    """The Hadoop FileSystem of ``target``, its ``Path`` class and its root."""
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    root = Path(target.rstrip("/"))
+    return root.getFileSystem(sc._jsc.hadoopConfiguration()), Path, root
+
+
+def drop_tier_dates(spark: SparkSession, target: str, dates: list[str]) -> None:
+    """Delete the ``event_date=<d>`` directories of ``dates`` from a parquet
+    tier; a date without one is skipped."""
+    fs, Path, root = _hadoop_fs(spark, target)
+    for d in dates:
+        fs.delete(Path(root, f"event_date={d}"), True)
+
+
 def _tier_days(spark: SparkSession, target: str):
     """A parquet tier's Hadoop FS handles and its ``{date: event_date dir}``
     map, after settling any swap a crash cut short. Raises ``ValueError``
     when the tier is not partitioned into ``event_date=`` directories."""
-    sc = spark.sparkContext
-    Path = sc._jvm.org.apache.hadoop.fs.Path
-    root = Path(target.rstrip("/"))
-    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, Path, root = _hadoop_fs(spark, target)
     _settle_swaps(fs, Path, root)
     days = {}
     for st in fs.listStatus(root):
@@ -190,7 +222,9 @@ def expire_tier_before(
     data rewrite). On the parquet layout it deletes the ``event_date=<d>``
     directories before the cutoff's date, so ``ts_col`` must be the column
     ``event_date`` was derived from, in the session time zone. Only a cutoff
-    off midnight rewrites data: the one day that straddles it."""
+    off midnight rewrites data: the one day that straddles it, through
+    ``tier_writer``, sorted by the columns up to ``ts_col`` (tier writers put
+    the key columns first, then the window, as ``resample.rollup`` does)."""
     import pandas as _pd
     try:
         cutoff_ts = _pd.Timestamp(cutoff)
@@ -228,9 +262,9 @@ def expire_tier_before(
         # skips; a failure anywhere leaves the whole old day in place
         new, old = (Path(root, f"_expire_{s}_{cut_day}") for s in ("new", "old"))
         try:
-            spark.read.parquet(str(days[cut_day])).filter(
-                F.col(ts_col) >= F.lit(str(cutoff_ts)).cast("timestamp")
-            ).write.parquet(str(new))
+            day = spark.read.parquet(str(days[cut_day]))
+            keep = day.filter(F.col(ts_col) >= F.lit(str(cutoff_ts)).cast("timestamp"))
+            tier_writer(keep, day.columns[:day.columns.index(ts_col) + 1]).parquet(str(new))
             if not (fs.rename(days[cut_day], old) and fs.rename(new, days[cut_day])):
                 raise RuntimeError(f"retention swap of {days[cut_day]} failed")
         finally:

@@ -9,6 +9,7 @@ import shutil
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
@@ -99,6 +100,63 @@ def test_rewriting_a_file_in_place_reopens_its_dates(spark, tmp_path):
     _write_raw(two_days, "2024-01-01", 288, seed=2)
     m = _run(spark, raw_dir, out)
     assert _lineage_dates(spark, out, m["run_id"]) == ["2024-01-01", "2024-01-02"]
+    _assert_tiers_hold_raw_tokens(raw_dir, out)
+
+
+def _rewrite_without_middle_day(path):
+    """Rewrite a three-day raw file in place without its middle day's rows:
+    its footer range still covers that day."""
+    t = pq.read_table(path)
+    day = pc.cast(t["event_time"], pa.date32()).cast(pa.string())
+    pq.write_table(t.filter(pc.not_equal(day, "2024-01-02")), path)
+
+
+def _tier_dates(out, tier):
+    path = pipeline.tier_path(out, tier)
+    return sorted(x for x in os.listdir(path) if x.startswith("event_date="))
+
+
+def test_pending_date_without_rows_drops_its_stale_partitions(spark, tmp_path):
+    raw_dir, out = str(tmp_path / "raw"), str(tmp_path / "store")
+    three_days = os.path.join(raw_dir, "part-0.parquet")
+    _write_raw(three_days, "2024-01-01", 432, seed=1)
+    _run(spark, raw_dir, out)
+
+    _rewrite_without_middle_day(three_days)
+    m = _run(spark, raw_dir, out)
+    assert _lineage_dates(spark, out, m["run_id"]) == ["2024-01-01", "2024-01-02", "2024-01-03"]
+    for tier in TIERS:
+        assert _tier_dates(out, tier) == ["event_date=2024-01-01", "event_date=2024-01-03"], tier
+    _assert_tiers_hold_raw_tokens(raw_dir, out)
+    assert m["rows"]["1m"] == len(_table(pipeline.tier_path(out, "1m")))
+    lin = LineageStore(spark, f"{out}/_lineage").read().filter(
+        (F.col("run_id") == m["run_id"]) & (F.col("partition_id") == "2024-01-02")).collect()
+    assert [(r["n_rows"], r["checksum"]) for r in lin] == [(0, 0)]
+
+
+def test_kill_while_dropping_stale_partitions_replays_to_a_clean_store(
+        spark, tmp_path, monkeypatch):
+    raw_dir, out = str(tmp_path / "raw"), str(tmp_path / "store")
+    three_days = os.path.join(raw_dir, "part-0.parquet")
+    _write_raw(three_days, "2024-01-01", 432, seed=1)
+    _run(spark, raw_dir, out)
+    _rewrite_without_middle_day(three_days)
+
+    orig_drop = pipeline.drop_tier_dates
+
+    def drop(spark_, target, dates):
+        if target.endswith("tier=1m"):  # the other tiers' dates are gone
+            raise pipeline.KilledForTest("killed before the 1m drop")
+        return orig_drop(spark_, target, dates)
+
+    monkeypatch.setattr(pipeline, "drop_tier_dates", drop)
+    with pytest.raises(pipeline.KilledForTest):
+        _run(spark, raw_dir, out)
+    assert _tier_dates(out, "1h") == ["event_date=2024-01-01", "event_date=2024-01-03"]
+    monkeypatch.undo()
+    _run(spark, raw_dir, out)
+    for tier in TIERS:
+        assert _tier_dates(out, tier) == ["event_date=2024-01-01", "event_date=2024-01-03"], tier
     _assert_tiers_hold_raw_tokens(raw_dir, out)
 
 
