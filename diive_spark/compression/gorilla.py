@@ -409,15 +409,6 @@ def unpack_blocks(packed: DataFrame, key_cols: list[str],
     out_schema = ", ".join(
         [f"{c} string" for c in key_cols] + ["ts bigint", "value double"]
     )
-    # floor the decode parallelism at the cluster core count: a packed
-    # tier is tiny in BYTES (that is the point of packing) so a cached or
-    # AQE-coalesced input often arrives on 1-2 partitions, serialising the
-    # Python decode loop; blobs are self-contained, so a round-robin
-    # spread is free of semantics. Inputs already wider than the core
-    # count (the 100 TB case) are left untouched.
-    sc = packed.sparkSession.sparkContext
-    if packed.rdd.getNumPartitions() < sc.defaultParallelism:
-        packed = packed.repartition(sc.defaultParallelism)
 
     def unpack(pdf_iter):
         # one decode call per BLOCK (a blob is a single encoded unit holding

@@ -88,7 +88,17 @@ def gridded(
     rollup_df = rollup_df.localCheckpoint(eager=False)
     grid = time_grid(rollup_df, tier, key_cols, global_span=global_span)
     data = rollup_df.drop("window_end")
-    return grid.join(data, on=[*key_cols, "window_start"], how="left")
+    return _left_join_null_safe(grid, data, [*key_cols, "window_start"])
+
+
+def _left_join_null_safe(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """``left.join(right, on, "left")`` in which a NULL key matches a NULL
+    key: a NULL group key is a series of its own (pandas
+    ``groupby(dropna=False)``), not one whose rows never match. The
+    output keeps the ``on`` columns of ``left`` only."""
+    right = right.select(*[F.col(c).alias(f"_nj_{c}") if c in on else c for c in right.columns])
+    cond = [F.col(c).eqNullSafe(F.col(f"_nj_{c}")) for c in on]
+    return left.join(right, cond, "left").drop(*[f"_nj_{c}" for c in on])
 
 
 def missing_windows(
@@ -159,10 +169,8 @@ def gap_stats_monthly(
     gcounts = gap_df.groupBy(*key_cols, F.month("gap_start").alias("MONTH")).agg(
         F.count(F.lit(1)).alias("n_gaps")
     )
-    return (
-        base.join(gcounts, on=[*key_cols, "MONTH"], how="left")
-        .withColumn("n_gaps", F.coalesce(F.col("n_gaps"), F.lit(0)))
-    )
+    return _left_join_null_safe(base, gcounts, [*key_cols, "MONTH"]).withColumn(
+        "n_gaps", F.coalesce(F.col("n_gaps"), F.lit(0)))
 
 
 def gap_stats_annual(

@@ -17,9 +17,28 @@ Reference semantics:
 Spark mapping: one ``groupBy(window(ts, tier), *keys)`` — a single shuffle on
 ``(window, key)``. At 100 TB this is the only raw-data shuffle in the whole
 engine; everything downstream (cascade, gap-fill, outliers, compression)
-operates on the rollup, which is ~1e5-1e6x smaller. Partial stats
-(count/sum/min/max/sum-of-squares) are carried so higher tiers re-aggregate
-without rescanning raw data (partial/final composition, SURVEY.md §2.4).
+operates on the rollup, which is ~1e5-1e6x smaller.
+
+Partial/final composition (SURVEY.md §2.4): ``_PARTIAL_AGGS`` is the one
+definition of the five partials carried per value column ``v`` — each name
+maps to its raw aggregate over ``v`` and to its merge aggregate over the
+stored ``{v}_{name}`` column:
+
+    cnt    count(v)                     sum(v_cnt)
+    sum    sum(v)                       sum(v_sum)
+    min    min(v)                       min(v_min)
+    max    max(v)                       max(v_max)
+    sumsq  sum(double(v) * double(v))   sum(v_sumsq)
+
+Every merge is associative, so a higher tier computed from a lower tier's
+partials equals the one computed from raw rows, and the 1m → 1h → 1d
+cascade never rescans raw data. ``_tumbling`` is the one tumbling-window
+aggregate behind ``rollup`` (raw aggregates, also on the watermarked stream
+of ``streaming.rollup_stream``) and ``reaggregate`` (merge aggregates); it
+emits ``keys, window_start, window_end``, the partials in ``PARTIAL_COLS``
+order, then ``{v}_mean = {v}_sum / {v}_cnt``. ``partial_cols`` names the
+partial columns in that order (``run_pipeline``'s lineage checksum reads
+them).
 """
 
 from __future__ import annotations
@@ -30,11 +49,40 @@ from pyspark.sql import functions as F
 TIER_INTERVALS = {"1m": "1 minute", "30m": "30 minutes", "1h": "1 hour", "1d": "1 day"}
 TIER_SECONDS = {"1m": 60, "30m": 1800, "1h": 3600, "1d": 86400}
 
-# Partial-aggregate columns carried per (key, window, value-column); these
-# compose under re-aggregation: sum/cnt/min/max/sumsq of the 1h tier are exact
-# functions of the 1m tier partials — the distributed analogue of the
-# reference's single-process partial/final split (SURVEY.md §2.4).
-PARTIAL_COLS = ("cnt", "sum", "min", "max", "sumsq")
+# name -> (raw aggregate over a value column, merge aggregate over the
+# stored partial); see the module docstring. sumsq feeds variance and is
+# computed in double: int*int overflows under ANSI mode for large values.
+_PARTIAL_AGGS = {
+    "cnt": (F.count, F.sum),
+    "sum": (F.sum, F.sum),
+    "min": (F.min, F.min),
+    "max": (F.max, F.max),
+    "sumsq": (lambda c: F.sum(c.cast("double") * c.cast("double")), F.sum),
+}
+PARTIAL_COLS = tuple(_PARTIAL_AGGS)
+
+
+def partial_cols(value_cols: list[str]) -> list[str]:
+    """The partial columns of ``value_cols``, in output order."""
+    return [f"{v}_{p}" for v in value_cols for p in PARTIAL_COLS]
+
+
+def _tumbling(df: DataFrame, ts_col: str, tier: str, value_cols: list[str],
+              key_cols: list[str], merge: bool) -> DataFrame:
+    """One row per (window of ``tier`` over ``ts_col``, keys): the partials
+    of each value column, from raw values or, with ``merge``, from the
+    stored partials of a lower tier."""
+    aggs = [(merged(F.col(f"{v}_{p}")) if merge else raw(F.col(v))).alias(f"{v}_{p}")
+            for v in value_cols for p, (raw, merged) in _PARTIAL_AGGS.items()]
+    grouped = df.groupBy(F.window(F.col(ts_col), TIER_INTERVALS[tier]).alias("w"),
+                         *key_cols).agg(*aggs)
+    return grouped.select(
+        *key_cols,
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        *partial_cols(value_cols),
+        *[(F.col(f"{v}_sum") / F.col(f"{v}_cnt")).alias(f"{v}_mean") for v in value_cols],
+    )
 
 
 def mincounts_rule(maxcounts: int, mincounts_perc: float) -> int:
@@ -71,30 +119,7 @@ def rollup(
     TIMESTAMP_END) plus per value column: ``{v}_cnt/_sum/_mean/_min/_max/_sumsq``.
     """
     key_cols = list(key_cols or [])
-    interval = TIER_INTERVALS[tier]
-    w = F.window(F.col(ts_col), interval)
-
-    aggs = []
-    for v in value_cols:
-        c = F.col(v)
-        aggs += [
-            F.count(c).alias(f"{v}_cnt"),
-            F.sum(c).alias(f"{v}_sum"),
-            F.min(c).alias(f"{v}_min"),
-            F.max(c).alias(f"{v}_max"),
-            # sumsq feeds variance; compute in double (int*int overflows
-            # under ANSI mode for large values, and precision is moot here)
-            F.sum(c.cast("double") * c.cast("double")).alias(f"{v}_sumsq"),
-        ]
-    grouped = df.groupBy(w.alias("w"), *key_cols).agg(*aggs)
-    out = grouped.select(
-        *key_cols,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *[f"{v}_{p}" for v in value_cols for p in PARTIAL_COLS],
-        *[(F.col(f"{v}_sum") / F.col(f"{v}_cnt")).alias(f"{v}_mean") for v in value_cols],
-    )
-
+    out = _tumbling(df, ts_col, tier, value_cols, key_cols, merge=False)
     if mincounts_perc and mincounts_perc > 0:
         gate_col = F.col(f"{value_cols[0]}_cnt")
         if slots_per_window is not None:
@@ -119,30 +144,13 @@ def reaggregate(
 ) -> DataFrame:
     """Final-merge a lower tier into a higher one without touching raw data.
 
-    1h tier = groupBy(window(1m.window_start, '1 hour')) of the 1m partials;
-    mean is recomputed as sum/cnt (SURVEY.md §2.4 cascade). Exactness is
-    guaranteed for cnt/sum/min/max/sumsq (associative) — tested as
-    reagg-equals-direct in tests/test_cascade.py.
+    1h tier = groupBy(window(1m.window_start, '1 hour')) of the 1m partials
+    under their merge aggregates; mean is recomputed as sum/cnt
+    (SURVEY.md §2.4 cascade). Exact, because every merge is associative —
+    tested as reagg-equals-direct in tests/test_cascade.py.
     """
-    key_cols = list(key_cols or [])
-    w = F.window(F.col("window_start"), TIER_INTERVALS[to_tier])
-    aggs = []
-    for v in value_cols:
-        aggs += [
-            F.sum(f"{v}_cnt").alias(f"{v}_cnt"),
-            F.sum(f"{v}_sum").alias(f"{v}_sum"),
-            F.min(f"{v}_min").alias(f"{v}_min"),
-            F.max(f"{v}_max").alias(f"{v}_max"),
-            F.sum(f"{v}_sumsq").alias(f"{v}_sumsq"),
-        ]
-    grouped = rollup_df.groupBy(w.alias("w"), *key_cols).agg(*aggs)
-    return grouped.select(
-        *key_cols,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *[f"{v}_{p}" for v in value_cols for p in PARTIAL_COLS],
-        *[(F.col(f"{v}_sum") / F.col(f"{v}_cnt")).alias(f"{v}_mean") for v in value_cols],
-    )
+    return _tumbling(rollup_df, "window_start", to_tier, value_cols,
+                     list(key_cols or []), merge=True)
 
 
 def resample_to_daily_agg(

@@ -204,7 +204,6 @@ def run_pipeline(
         "stage_s": stage_s,
     }
 
-    stat_cols = [f"{v}_{p}" for v in value_cols for p in resample.PARTIAL_COLS]
     order = [*key_cols, "window_start"]
     manifest_rows = [{**r, "run_id": run_id} for r in todo.manifest]
 
@@ -238,7 +237,7 @@ def run_pipeline(
             t1m_back = spark.read.schema(t1m.schema).option("basePath", base).parquet(
                 *[f"{base}/event_date={d}" for d in written])
             jobs = {"checksum": lambda: t1m_back.groupBy("event_date")
-                    .agg(checksum_expr(stat_cols)).collect()}
+                    .agg(checksum_expr(resample.partial_cols(value_cols))).collect()}
             for tier in TIER_CHAIN[1:]:
                 agg = resample.reaggregate(t1m_back, tier, value_cols, key_cols=key_cols
                                            ).withColumn("event_date", F.to_date("window_start"))

@@ -3,10 +3,10 @@
 The reference is pure batch (SURVEY.md §1.4) and the engine's resumability
 story is deliberately batch + lineage (north rule replay semantics). This
 module provides the *streaming ingest front-end* for deployments where the
-token table arrives as files: the same tumbling-window aggregate as
-``resample.rollup``, expressed as a watermarked streaming query, so late
-data inside the watermark updates its window and the emitted rows are
-append-only complete windows.
+token table arrives as files. ``streaming_rollup`` *is* ``resample.rollup``
+applied to a watermarked file stream: the same partials, the same select,
+the same output schema, so late data inside the watermark updates its
+window and the emitted rows are append-only complete windows.
 
 Semantics mapping (SURVEY.md §2.9):
 - tumbling window        -> F.window(ts, tier) (identical to batch)
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from diive_spark.operators.resample import PARTIAL_COLS, TIER_INTERVALS
+from diive_spark.operators import resample
 
 
 def streaming_rollup(
@@ -40,12 +40,12 @@ def streaming_rollup(
     key_cols: list[str],
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """readStream(files) -> watermarked tumbling-window partial aggregates.
+    """readStream(files) -> ``resample.rollup`` of the watermarked stream.
 
     Returns the streaming DataFrame; start it with
     ``df.writeStream.trigger(availableNow=True)...`` (tests) or a
-    continuous trigger in production. Output schema matches
-    ``resample.rollup`` exactly so downstream tiers are source-agnostic.
+    continuous trigger in production. Being ``resample.rollup``, its output
+    schema is the batch rollup's, so downstream tiers are source-agnostic.
     """
     stream = spark.readStream.schema(schema).parquet(source_dir)
     # Structured Streaming event time must be TIMESTAMP (with zone): a
@@ -53,29 +53,8 @@ def streaming_rollup(
     # UTC sessions the cast preserves the wall-clock instant.
     if dict(stream.dtypes).get(ts_col) == "timestamp_ntz":
         stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    w = F.window(F.col(ts_col), TIER_INTERVALS[tier])
-    aggs = []
-    for v in value_cols:
-        c = F.col(v)
-        aggs += [
-            F.count(c).alias(f"{v}_cnt"),
-            F.sum(c).alias(f"{v}_sum"),
-            F.min(c).alias(f"{v}_min"),
-            F.max(c).alias(f"{v}_max"),
-            F.sum(c.cast("double") * c.cast("double")).alias(f"{v}_sumsq"),
-        ]
-    grouped = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(w.alias("w"), *key_cols)
-        .agg(*aggs)
-    )
-    return grouped.select(
-        *key_cols,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *[f"{v}_{p}" for v in value_cols for p in PARTIAL_COLS],
-        *[(F.col(f"{v}_sum") / F.col(f"{v}_cnt")).alias(f"{v}_mean") for v in value_cols],
-    )
+    return resample.rollup(stream.withWatermark(ts_col, watermark), ts_col, value_cols,
+                           tier, key_cols=key_cols)
 
 
 def run_available_now(

@@ -1,5 +1,7 @@
 """Grid/gap machinery + gap-fill cascade vs pandas oracles and seeded gaps."""
 
+from datetime import datetime
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -465,3 +467,38 @@ def test_halo_exchange_never_narrows_its_input(spark, width):
     want = max(width, spark.sparkContext.defaultParallelism)
     assert out.rdd.getNumPartitions() == want
     assert sorted(r["value"] for r in out.collect()) == [float(i) for i in range(200)]
+
+
+def _null_key_rollup(spark, minutes):
+    """A 1m rollup of one point per listed minute, keyed by ``k`` (None is a
+    NULL key); value = minute + 1."""
+    rows = [(k, datetime(2024, 1, 1, 0, m), float(m + 1))
+            for k, ms in minutes.items() for m in ms]
+    raw = spark.createDataFrame(rows, "k string, event_time timestamp, v double")
+    return resample.rollup(raw, "event_time", ["v"], "1m", key_cols=["k"])
+
+
+def test_null_key_keeps_its_values_through_the_grid(spark):
+    """A NULL group key is a series of its own: its observed windows stay
+    observed on the grid, it has no phantom gap, and the gap-fill cascade
+    keeps its values."""
+    g = grid.gridded(_null_key_rollup(spark, {"a": [0, 2], None: [0, 1, 2]}), "1m", ["k"])
+    pdf = g.toPandas()
+    null = pdf[pdf["k"].isna()].sort_values("window_start")
+    assert list(null["v_mean"]) == [1.0, 2.0, 3.0]
+    assert pdf[pdf["k"] == "a"]["v_mean"].isna().sum() == 1
+
+    gaps = grid.gap_table(g, ["k"], "v_mean").toPandas()
+    assert list(gaps["k"]) == ["a"] and list(gaps["gap_length"]) == [1]
+
+    f = gapfill.gapfill_cascade(g, ["k"], "window_start", "v_mean", 60).toPandas()
+    null = f[f["k"].isna()].sort_values("window_start")
+    assert list(null["filled"]) == [1.0, 2.0, 3.0]
+
+
+def test_gap_stats_monthly_counts_null_key_gaps(spark):
+    """n_gaps of a NULL key counts its gaps instead of reading 0."""
+    g = grid.gridded(_null_key_rollup(spark, {"a": [0, 1, 2], None: [0, 2]}), "1m", ["k"])
+    stats = grid.gap_stats_monthly(g, ["k"], "v_mean").toPandas()
+    got = {k: n for k, n in zip(stats["k"].fillna("NULL"), stats["n_gaps"])}
+    assert got == {"a": 0, "NULL": 1}

@@ -2,6 +2,8 @@
 partitions recompute (lineage anti-join)."""
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,3 +122,22 @@ def test_pyfiles_zip_matches_tree():
         for name, want in tree.items():
             assert z.read(name) == want, (
                 f"zip stale for {name} — rerun scripts/make_pyfiles_zip.py")
+
+
+def test_lineage_checksum_of_a_fixed_input_is_pinned(spark, tmp_path):
+    """The lineage checksum hashes the 1m partial columns in their stored
+    order; the same input must keep the same checksum across releases, so
+    stored lineage stays comparable."""
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    secs = np.arange(0, 2 * 86400, 977, dtype=np.int64)
+    pq.write_table(pa.table({
+        "event_time": pa.array((1704067200 + secs) * 1_000_000, pa.timestamp("us", tz="UTC")),
+        "n_tok": pa.array((secs * 7919) % 1013, pa.int64()),
+        "source": pa.array(np.where(secs % 3 == 0, "web", "code")),
+    }), str(raw_dir / "part-0.parquet"))
+    out = str(tmp_path / "store")
+    pipeline.run_pipeline(spark, spark.read.parquet(str(raw_dir)), out)
+    lin = LineageStore(spark, f"{out}/_lineage").read().filter("tier = '1m'").toPandas()
+    assert dict(zip(lin["partition_id"], lin["checksum"])) == {
+        "2024-01-01": -7676001701228768360, "2024-01-02": 6281503755686133139}
