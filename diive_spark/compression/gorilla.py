@@ -41,8 +41,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from diive_spark.operators.halo import exchange_width
-
 # ---------------------------------------------------------------------------
 # bit packing primitives (vectorized)
 # ---------------------------------------------------------------------------
@@ -396,8 +394,10 @@ def pack_blocks(
     # block alone, which still satisfies the (key, block) grouping: every
     # key of a block lands in one task, so a partitioned write puts each
     # block (a day, in run_pipeline) in one file. The price is that one
-    # block's keys encode in one Python worker.
-    src = src.repartition(exchange_width(src), "block_id")
+    # block's keys encode in one Python worker. Partitions beyond the
+    # distinct blocks stay empty, so the width is the cluster's
+    # parallelism whatever the input's, and nothing is planned to find it.
+    src = src.repartition(df.sparkSession.sparkContext.defaultParallelism, "block_id")
     return src.groupBy(*key_cols, "block_id").applyInPandas(pack, schema=out_schema)
 
 

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from diive_spark.operators.grid import _left_join_null_safe
 from diive_spark.operators.halo import apply_with_halo
 
 FLAG_OBSERVED = 0
@@ -374,9 +375,10 @@ def climatology_fill(
     rows the full model can't predict get a model on timestamp features only).
 
     The climatology is the per (key[, month], hour, minute) mean of OBSERVED
-    values (a groupBy + broadcast join-back — pure exprs); still-missing slots
-    with >= min_samples climatology support get flag 3, granular 3000+count
-    capped at 3999. Observed and previously-filled values are never touched.
+    values (a groupBy + broadcast join-back — pure exprs; a NULL key joins
+    its own climatology); still-missing slots with >= min_samples
+    climatology support get flag 3, granular 3000+count capped at 3999.
+    Observed and previously-filled values are never touched.
     """
     v = F.col(value_col)
     groups = [*key_cols, F.hour(ts_col).alias("_h"), F.minute(ts_col).alias("_m")]
@@ -391,7 +393,7 @@ def climatology_fill(
     out = df.withColumn("_h", F.hour(ts_col)).withColumn("_m", F.minute(ts_col))
     if each_month:
         out = out.withColumn("_mo", F.month(ts_col))
-    out = out.join(F.broadcast(clim), join_keys, "left")
+    out = _left_join_null_safe(out, F.broadcast(clim), join_keys)
 
     still_missing = F.col(filled_col).isNull() if filled_col in df.columns else v.isNull()
     # materialize the predicate BEFORE mutating filled_col: withColumn
@@ -578,7 +580,7 @@ def linear_model_fill(
 
     coefs = stats.mapInPandas(_solve, schema=coef_schema)
 
-    out = work.join(F.broadcast(coefs), on=key_cols, how="left")
+    out = _left_join_null_safe(work, F.broadcast(coefs), key_cols)
     pred = F.col("_b0")
     for i, n in enumerate(fnames, start=1):
         pred = pred + F.col(f"_b{i}") * F.col(n)

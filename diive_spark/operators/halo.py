@@ -45,9 +45,10 @@ def explode_halo_slabs(
 ) -> DataFrame:
     """Single-scan halo duplication: each row explodes into its own slab
     plus (when near a boundary) a halo copy in the neighbouring slab —
-    appends ``_slab`` / ``_halo`` columns. One pass over the input (no
-    unions, so an expensive upstream plan is never recomputed; scan volume
-    1x + halo fraction).
+    appends ``_slab`` (bigint) / ``_halo`` (tinyint 0/1) columns: the row
+    goes to every slab from the one of ``ts - halo`` to the one of
+    ``ts + halo``. One pass over the input (no unions, so an expensive
+    upstream plan is never recomputed; scan volume 1x + halo fraction).
 
     Callers either hand the groups to a pandas kernel (apply_with_halo) or
     run plain JVM WINDOW expressions partitioned by (keys..., _slab) — the
@@ -57,31 +58,15 @@ def explode_halo_slabs(
     if halo_seconds >= slab_seconds:
         raise ValueError("halo must be smaller than slab")
     epoch = F.unix_timestamp(F.col(ts_col))
-    slab_id = F.floor(epoch / F.lit(slab_seconds))
-    # pmod, not %: Spark's % follows the dividend's sign, which would send
-    # pre-1970 rows' halo copies to the wrong neighbour slab
-    pos_in_slab = F.pmod(epoch, F.lit(slab_seconds))
-    targets = F.array_compact(
-        F.array(
-            F.struct(slab_id.alias("s"), F.lit(0).cast("tinyint").alias("h")),
-            # rows near the END of a slab are needed by the NEXT slab's head
-            F.when(
-                pos_in_slab >= F.lit(slab_seconds - halo_seconds),
-                F.struct((slab_id + 1).alias("s"), F.lit(1).cast("tinyint").alias("h")),
-            ),
-            # rows near the START of a slab are needed by the PREVIOUS slab
-            F.when(
-                pos_in_slab < F.lit(halo_seconds),
-                F.struct((slab_id - 1).alias("s"), F.lit(1).cast("tinyint").alias("h")),
-            ),
-        )
-    )
-    return (
-        df.withColumn("_t", F.explode(targets))
-        .withColumn("_slab", F.col("_t.s"))
-        .withColumn("_halo", F.col("_t.h"))
-        .drop("_t")
-    )
+
+    def slab_of(t):  # floor, not a cast: pre-1970 rows round down too
+        return F.floor(t / F.lit(slab_seconds))
+
+    # a row within halo_seconds of its slab's start also lands in the
+    # previous slab, one within halo_seconds of its end in the next
+    slabs = F.sequence(slab_of(epoch - F.lit(halo_seconds)), slab_of(epoch + F.lit(halo_seconds)))
+    return df.withColumn("_slab", F.explode(slabs)).withColumn(
+        "_halo", (F.col("_slab") != slab_of(epoch)).cast("tinyint"))
 
 
 def apply_with_halo(

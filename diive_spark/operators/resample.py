@@ -50,14 +50,16 @@ TIER_INTERVALS = {"1m": "1 minute", "30m": "30 minutes", "1h": "1 hour", "1d": "
 TIER_SECONDS = {"1m": 60, "30m": 1800, "1h": 3600, "1d": 86400}
 
 # name -> (raw aggregate over a value column, merge aggregate over the
-# stored partial); see the module docstring. sumsq feeds variance and is
-# computed in double: int*int overflows under ANSI mode for large values.
+# stored partial), as SQL templates of the quoted column; see the module
+# docstring. Text builds each aggregate in one JVM call instead of one per
+# function and cast. sumsq feeds variance and is computed in double:
+# int*int overflows under ANSI mode for large values.
 _PARTIAL_AGGS = {
-    "cnt": (F.count, F.sum),
-    "sum": (F.sum, F.sum),
-    "min": (F.min, F.min),
-    "max": (F.max, F.max),
-    "sumsq": (lambda c: F.sum(c.cast("double") * c.cast("double")), F.sum),
+    "cnt": ("count({})", "sum({})"),
+    "sum": ("sum({})", "sum({})"),
+    "min": ("min({})", "min({})"),
+    "max": ("max({})", "max({})"),
+    "sumsq": ("sum(CAST({0} AS DOUBLE) * CAST({0} AS DOUBLE))", "sum({})"),
 }
 PARTIAL_COLS = tuple(_PARTIAL_AGGS)
 
@@ -72,16 +74,19 @@ def _tumbling(df: DataFrame, ts_col: str, tier: str, value_cols: list[str],
     """One row per (window of ``tier`` over ``ts_col``, keys): the partials
     of each value column, from raw values or, with ``merge``, from the
     stored partials of a lower tier."""
-    aggs = [(merged(F.col(f"{v}_{p}")) if merge else raw(F.col(v))).alias(f"{v}_{p}")
-            for v in value_cols for p, (raw, merged) in _PARTIAL_AGGS.items()]
-    grouped = df.groupBy(F.window(F.col(ts_col), TIER_INTERVALS[tier]).alias("w"),
-                         *key_cols).agg(*aggs)
-    return grouped.select(
-        *key_cols,
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *partial_cols(value_cols),
-        *[(F.col(f"{v}_sum") / F.col(f"{v}_cnt")).alias(f"{v}_mean") for v in value_cols],
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    aggs = []
+    for v in value_cols:
+        for p, (raw, merged) in _PARTIAL_AGGS.items():
+            sql = merged.format(q(f"{v}_{p}")) if merge else raw.format(q(v))
+            aggs.append(F.expr(f"{sql} AS {q(f'{v}_{p}')}"))
+    window = F.expr(f"window({q(ts_col)}, '{TIER_INTERVALS[tier]}') AS w")
+    return df.groupBy(window, *key_cols).agg(*aggs).selectExpr(
+        *map(q, key_cols), "w.start AS window_start", "w.end AS window_end",
+        *map(q, partial_cols(value_cols)),
+        *[f"{q(f'{v}_sum')} / {q(f'{v}_cnt')} AS {q(f'{v}_mean')}" for v in value_cols],
     )
 
 

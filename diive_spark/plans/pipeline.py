@@ -18,19 +18,22 @@ Physical plan (SURVEY.md §4.3):
   — the Zipf-skewed 'web' source is defused by the combine step (every map
   task pre-aggregates its own windows before the shuffle), plus AQE skew
   splitting for residual imbalance.
-- 1h and 1d tiers each re-aggregate the batch's 1m partitions, read back by
-  their ``event_date=<d>`` paths — raw data is scanned exactly once per
-  partition. The partials merge exactly, so 1d from 1m equals 1d from 1h.
-  The lineage checksum is one aggregate over those same 1m rows.
-- After the 1m write and its footer counts, four jobs that only read the
-  batch's 1m partitions run at the same time from a small thread pool: the
-  checksum collect and the 1h, 1d and packed writes. Their fixed per-job
-  costs overlap instead of adding up. Each thread runs under the caller's
-  local properties and session tags (``inheritable_thread_target``), so a
+- The batch's 1m rollup is persisted, and every output of the batch reads
+  it: the 1m write, the lineage checksum (one aggregate over the 1m rows),
+  the packed write and the 1h and 1d tiers, which each re-aggregate it.
+  Raw data is scanned exactly once per partition and no tier is read back.
+  The partials merge exactly, so 1d from 1m equals 1d from 1h. ``persist``
+  keeps the rollup's lineage, so a lost executor recomputes its blocks;
+  the run unpersists it when the batch's jobs end, failed or not.
+- Those five jobs (the 1m write, the checksum collect and the 1h, 1d and
+  packed writes) run at the same time from a small thread pool, and each
+  builds its own plan in its thread, so their planning and fixed per-job
+  costs overlap instead of adding up. Each thread runs under the caller's local
+  properties and session tags (``inheritable_thread_target``), so a
   caller's job group or scheduler pool covers them. The run waits for all
-  four, then raises the first error in that order; a failed batch commits
-  no lineage row, and the tiers its finished jobs wrote are overwritten
-  when it replays. Batches run one after another.
+  five, then raises the first error in that order; a failed batch
+  commits no lineage row, and the tiers its finished jobs wrote are
+  overwritten when it replays. Batches run one after another.
 - Outputs land under ``out/tier=<t>/event_date=<d>/`` and are idempotently
   overwritten on replay; the lineage row commits AFTER the output write, so
   kill-at-any-point replays only unfinished dates (tests/test_pipeline.py).
@@ -45,11 +48,11 @@ Physical plan (SURVEY.md §4.3):
   readers filter in. The pack exchange is clustered on the block (one
   block is one day), so the packed tier holds one file per date.
 - ``metrics["stage_s"]`` holds the wall seconds of each stage, summed over
-  batches: ``pending``, ``1m`` (write and footer counts), each overlapped
-  job (``checksum``, ``1h``, ``1d``, ``packed``), ``overlap`` (the section
-  that runs them, shorter than their sum when they overlap) and
-  ``commit``. The engine measures them itself because a tracer that keeps
-  one stack of open spans cannot attribute jobs that run concurrently.
+  batches: ``pending``, each overlapped job (``1m``, ``checksum``, ``1h``,
+  ``1d``, ``packed``), ``overlap`` (the section that runs them, shorter
+  than their sum when they overlap) and ``commit``. The engine measures
+  them itself because a tracer that keeps one stack of open spans cannot
+  attribute jobs that run concurrently.
 - Counts come from the parquet footers of the partitions a batch wrote, so
   no tier is read back to be counted; ``metrics["rows"]`` is the rows this
   run wrote, per tier. (``DataFrame.observe`` with an ``Observation`` is
@@ -106,12 +109,16 @@ def _slab(raw: DataFrame, ts_col: str, dates: list[str]) -> DataFrame:
     return raw.filter(cond)
 
 
-def _write(df: DataFrame, out_dir: str, tier: str, sort_cols: list[str]) -> None:
+def _write(df: DataFrame, out_dir: str, tier: str, sort_cols: list[str],
+           event_date=None) -> None:
     """Overwrite ``df``'s event_date partitions of ``tier``, each file's rows
-    sorted by ``sort_cols``."""
-    tier_writer(df, ["event_date", *sort_cols]).mode("overwrite").partitionBy(
-        "event_date").option("partitionOverwriteMode", "dynamic").parquet(
-        tier_path(out_dir, tier))
+    sorted by ``sort_cols``. A row's date is ``event_date``, by default the
+    date of its window_start."""
+    if event_date is None:
+        event_date = F.to_date("window_start")
+    writer = tier_writer(df.withColumn("event_date", event_date), ["event_date", *sort_cols])
+    writer.mode("overwrite").partitionBy("event_date").option(
+        "partitionOverwriteMode", "dynamic").parquet(tier_path(out_dir, tier))
 
 
 def _write_packed(t1m: DataFrame, out_dir: str, key_cols: list[str], value_col: str) -> None:
@@ -124,9 +131,8 @@ def _write_packed(t1m: DataFrame, out_dir: str, key_cols: list[str], value_col: 
         t1m.withColumn("_k", F.concat_ws("|", *key_cols) if key_cols else F.lit("all")),
         ["_k"], "window_start", value_col, block_seconds=86400,
     ).withColumnRenamed("_k", "series_key")
-    _write(packed.withColumn(
-        "event_date", F.to_date(F.timestamp_seconds(F.col("block_id") * 86400))
-    ), out_dir, "packed", ["series_key", "block_id"])
+    _write(packed, out_dir, "packed", ["series_key", "block_id"],
+           F.to_date(F.timestamp_seconds(F.col("block_id") * 86400)))
 
 
 def _concurrently(spark: SparkSession, jobs: dict[str, Callable[[], Any]]
@@ -159,12 +165,6 @@ def _partitions(out_dir: str, tier: str, dates: list[str]) -> dict[str, ds.Datas
         except FileNotFoundError:
             pass
     return parts
-
-
-def _rows(out_dir: str, tier: str, dates: list[str]) -> int:
-    """Rows of ``tier``'s event_date partitions of ``dates``, from their
-    parquet footers."""
-    return sum(p.count_rows() for p in _partitions(out_dir, tier, dates).values())
 
 
 def run_pipeline(
@@ -211,13 +211,31 @@ def run_pipeline(
     for bi, batch in enumerate(batches):
         if fail_after_batches is not None and bi >= fail_after_batches:
             raise KilledForTest(f"simulated kill before batch {bi}")
-        t_batch, t0 = time.time(), time.perf_counter()
-        t1m = resample.rollup(
-            _slab(raw, ts_col, batch), ts_col, value_cols, "1m", key_cols=key_cols,
-            mincounts_perc=mincounts_perc,
-        ).withColumn("event_date", F.to_date("window_start"))
+        t_batch = time.time()
+        t1m = resample.rollup(_slab(raw, ts_col, batch), ts_col, value_cols, "1m",
+                              key_cols=key_cols, mincounts_perc=mincounts_perc).persist()
+        # each job builds its plan in its own thread
+        jobs = {
+            "1m": functools.partial(_write, t1m, out_dir, "1m", order),
+            "checksum": lambda: t1m.groupBy(F.to_date("window_start").alias("event_date")).agg(
+                checksum_expr(resample.partial_cols(value_cols))).collect(),
+        }
+        for tier in TIER_CHAIN[1:]:
+            jobs[tier] = lambda tier=tier: _write(resample.reaggregate(
+                t1m, tier, value_cols, key_cols=key_cols), out_dir, tier, order)
+        if pack_tier:
+            jobs["packed"] = functools.partial(_write_packed, t1m, out_dir, key_cols,
+                                               f"{value_cols[0]}_mean")
         before = {d: set(p.files) for d, p in _partitions(out_dir, "1m", batch).items()}
-        _write(t1m, out_dir, "1m", order)
+        t0 = time.perf_counter()
+        try:
+            done = _concurrently(spark, jobs)
+        finally:
+            t1m.unpersist()
+        stage_s["overlap"] += time.perf_counter() - t0
+        for name, (_, secs) in done.items():
+            stage_s[name] += secs
+
         # a partition the dynamic overwrite did not replace keeps its old files
         parts = {d: p for d, p in _partitions(out_dir, "1m", batch).items()
                  if set(p.files) != before.get(d)}
@@ -227,33 +245,11 @@ def run_pipeline(
             for tier in [*TIER_CHAIN[1:], "packed", "1m"]:
                 drop_tier_dates(spark, tier_path(out_dir, tier), lacking)
         n_rows = {d: parts[d].count_rows() if d in parts else 0 for d in batch}
+        checksums = {str(r["event_date"]): r["checksum"] for r in done["checksum"][0]}
         metrics["rows"]["1m"] += sum(n_rows.values())
-        stage_s["1m"] += time.perf_counter() - t0
-
-        checksums = {}
-        if written:  # a date with no rows has no 1m partition to read back
-            base = tier_path(out_dir, "1m")
-            # the known schema spares a footer-reading job
-            t1m_back = spark.read.schema(t1m.schema).option("basePath", base).parquet(
-                *[f"{base}/event_date={d}" for d in written])
-            jobs = {"checksum": lambda: t1m_back.groupBy("event_date")
-                    .agg(checksum_expr(resample.partial_cols(value_cols))).collect()}
-            for tier in TIER_CHAIN[1:]:
-                agg = resample.reaggregate(t1m_back, tier, value_cols, key_cols=key_cols
-                                           ).withColumn("event_date", F.to_date("window_start"))
-                jobs[tier] = functools.partial(_write, agg, out_dir, tier, order)
-            if pack_tier:
-                jobs["packed"] = functools.partial(_write_packed, t1m_back, out_dir,
-                                                   key_cols, f"{value_cols[0]}_mean")
-
-            t0 = time.perf_counter()
-            done = _concurrently(spark, jobs)
-            stage_s["overlap"] += time.perf_counter() - t0
-            for name, (_, secs) in done.items():
-                stage_s[name] += secs
-            checksums = {str(r["event_date"]): r["checksum"] for r in done["checksum"][0]}
-            for tier in tiers[1:]:
-                metrics["rows"][tier] += _rows(out_dir, tier, written)
+        for tier in tiers[1:]:
+            metrics["rows"][tier] += sum(
+                p.count_rows() for p in _partitions(out_dir, tier, written).values())
 
         # lineage AFTER outputs: crash before this line -> batch replays
         elapsed = time.time() - t_batch

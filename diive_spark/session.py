@@ -88,6 +88,10 @@ def get_spark(
             shuffle_partitions
             or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
         ),
+        # The read ops together generate more than the default 100 classes,
+        # so at 100 every pass of them recompiled about 60 (0.3 s of Janino
+        # time); at 256 a repeated op compiles none.
+        "spark.sql.codegen.cache.maxEntries": "256",
         # Timestamps are wall-clock UTC throughout the engine.
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

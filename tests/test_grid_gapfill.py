@@ -502,3 +502,65 @@ def test_gap_stats_monthly_counts_null_key_gaps(spark):
     stats = grid.gap_stats_monthly(g, ["k"], "v_mean").toPandas()
     got = {k: n for k, n in zip(stats["k"].fillna("NULL"), stats["n_gaps"])}
     assert got == {"a": 0, "NULL": 1}
+
+
+@pytest.mark.parametrize("fill", ["climatology", "linear_model"])
+def test_null_key_gaps_are_filled(spark, fill):
+    """climatology_fill and linear_model_fill fill a NULL key's gaps from
+    that key's own climatology or model, as they do for any other key."""
+    ts = pd.date_range("2024-01-01", periods=6 * 24, freq="1h")
+    vals = 10 + 5 * np.sin(2 * np.pi * ts.hour / 24)
+    pdf = pd.concat([pd.DataFrame({"k": k, "window_start": ts, "value": vals + i})
+                     for i, k in enumerate(["a", None])], ignore_index=True)
+    pdf.loc[pdf["window_start"] == ts[30], "value"] = np.nan  # one gap per key
+    df = spark.createDataFrame(pdf, "k string, window_start timestamp, value double")
+    if fill == "climatology":
+        out, flag = gapfill.climatology_fill(df, ["k"], "window_start", "value"), gapfill.FLAG_CLIMATOLOGY
+    else:
+        out, flag = gapfill.linear_model_fill(df, ["k"], "window_start", "value"), gapfill.FLAG_MODEL
+    out = out.toPandas()
+    assert len(out) == 2 * len(ts)
+    for k, part in out.groupby(out["k"].fillna("NULL")):
+        assert part["filled"].notna().all(), k
+        assert list(part[part["window_start"] == ts[30]]["fill_flag"]) == [flag], k
+    # the NULL key's value came from its own series (offset 1), not key a's
+    null_fill = out[out["k"].isna() & (out["window_start"] == ts[30])]["filled"].iloc[0]
+    a_fill = out[(out["k"] == "a") & (out["window_start"] == ts[30])]["filled"].iloc[0]
+    assert null_fill == pytest.approx(a_fill + 1, abs=1e-4)
+
+
+def _explode_halo_slabs_oracle(df, ts_col, slab_seconds, halo_seconds):
+    """The struct-array form of halo.explode_halo_slabs: the slab of the
+    row, plus the next slab when the row lies within halo of its slab's end
+    and the previous one when it lies within halo of its start."""
+    epoch = F.unix_timestamp(F.col(ts_col))
+    slab_id = F.floor(epoch / F.lit(slab_seconds))
+    pos_in_slab = F.pmod(epoch, F.lit(slab_seconds))
+    targets = F.array_compact(F.array(
+        F.struct(slab_id.alias("s"), F.lit(0).cast("tinyint").alias("h")),
+        F.when(pos_in_slab >= F.lit(slab_seconds - halo_seconds),
+               F.struct((slab_id + 1).alias("s"), F.lit(1).cast("tinyint").alias("h"))),
+        F.when(pos_in_slab < F.lit(halo_seconds),
+               F.struct((slab_id - 1).alias("s"), F.lit(1).cast("tinyint").alias("h"))),
+    ))
+    return (df.withColumn("_t", F.explode(targets))
+            .withColumn("_slab", F.col("_t.s")).withColumn("_halo", F.col("_t.h")).drop("_t"))
+
+
+@pytest.mark.parametrize("slab_seconds,halo_seconds", [(20 * 3600, 3 * 3600), (600, 299), (7 * 86400, 3600)])
+def test_halo_explode_equals_the_struct_form(spark, slab_seconds, halo_seconds):
+    """The sequence explode gives every row the same (slab, halo) copies as
+    the struct-array form, at slab boundaries +-1 s, at +-halo around them,
+    and before 1970."""
+    from diive_spark.operators.halo import explode_halo_slabs
+
+    h, s = halo_seconds, slab_seconds
+    offsets = [-h - 1, -h, -h + 1, -1, 0, 1, h - 1, h, h + 1, s // 2]
+    epochs = sorted({k * s + o for k in range(-40, 41) for o in offsets})
+    pdf = pd.DataFrame({"k": "x", "epoch": epochs})
+    df = spark.createDataFrame(pdf).withColumn("ts", F.timestamp_seconds("epoch"))
+    got = explode_halo_slabs(df, "ts", s, h)
+    want = _explode_halo_slabs_oracle(df, "ts", s, h)
+    assert got.dtypes == want.dtypes
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert epochs[0] < 0 and got.filter("_halo = 1").count() > 0

@@ -1,8 +1,11 @@
-"""The jobs after the 1m write (checksum, 1h, 1d and packed writes) run
-concurrently: the run reports each stage's seconds, a failed job surfaces
-only after its siblings ended and leaves a batch that replays to a clean
-store, and every job runs under the caller's Spark job group."""
+"""A batch's five jobs (the 1m, 1h, 1d and packed writes and the checksum
+collect) run concurrently over its persisted 1m rollup: the run reports
+each stage's seconds, a failed job surfaces only after its siblings ended
+and leaves a batch that replays to a clean store, every job runs under the
+caller's Spark job group, raw rows are read by one stage per batch and no
+cache outlives the run."""
 
+import hashlib
 import os
 
 import numpy as np
@@ -19,11 +22,11 @@ from diive_spark.plans.lineage import LineageStore
 TIERS = ["1m", "1h", "1d", "packed"]
 
 
-def _raw_days(raw_dir, days):
+def _raw_days(raw_dir, days, freq="10min", seed=0):
     os.makedirs(raw_dir, exist_ok=True)
     for i, day in enumerate(days):
-        ts = pd.date_range(day, periods=144, freq="10min")
-        rng = np.random.default_rng(i)
+        ts = pd.date_range(day, periods=pd.Timedelta("1D") // pd.Timedelta(freq), freq=freq)
+        rng = np.random.default_rng(seed + i)
         pq.write_table(pa.table({
             "event_time": pa.array(ts.values.astype("datetime64[us]"), pa.timestamp("us", tz="UTC")),
             "n_tok": pa.array(rng.integers(1, 1000, len(ts)), pa.int64()),
@@ -48,6 +51,23 @@ def _latest_lineage(spark, out):
     return lin.set_index("partition_id")[["n_rows", "checksum", "input_fingerprint"]].sort_index()
 
 
+def _persisted(spark):
+    """Ids of the RDDs the session holds persisted. Spark's context cleaner
+    may release an earlier one meanwhile, so a run may only shrink this."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _stage_input_records(spark, group):
+    """{stage id: input records} of the stages of ``group``'s jobs."""
+    sc = spark.sparkContext
+    tracker, store, gw = sc.statusTracker(), sc._jsc.sc().statusStore(), sc._gateway
+    stages = {sid for job in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(job).stageIds}
+    return {sid: store.stageData(sid, False, gw.jvm.java.util.ArrayList(), False,
+                                 gw.new_array(gw.jvm.double, 0)).apply(0).inputRecords()
+            for sid in stages}
+
+
 def test_stage_seconds_cover_every_stage(spark, tmp_path):
     raw_dir = str(tmp_path / "raw")
     _raw_days(raw_dir, ["2024-01-01", "2024-01-02"])
@@ -69,6 +89,7 @@ def test_failed_job_waits_for_its_siblings_and_the_batch_replays(
     days = ["2024-01-01", "2024-01-02", "2024-01-03"]
     _raw_days(raw_dir, days)
     clean, resume = str(tmp_path / "clean"), str(tmp_path / "resume")
+    persisted = _persisted(spark)
     _run(spark, raw_dir, clean, batch_size=2)
 
     owner, name = (gorilla, "pack_blocks") if failing == "packed" else (pipeline, "checksum_expr")
@@ -83,6 +104,7 @@ def test_failed_job_waits_for_its_siblings_and_the_batch_replays(
     monkeypatch.setattr(owner, name, fail_second)
     with pytest.raises(RuntimeError, match=f"{failing} failed"):
         _run(spark, raw_dir, resume, batch_size=2)
+    assert _persisted(spark) <= persisted  # the failed batch's rollup is gone too
     # the sibling jobs of the failed one ran to their end before the raise
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
     for tier in {"1h", "1d", "packed"} - {failing}:
@@ -114,5 +136,58 @@ def test_overlapped_jobs_run_under_the_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
-    # at least the 1m write and the four overlapped jobs of each batch
+    # at least the five overlapped jobs of each batch
     assert len(tracker.getJobIdsForGroup("pipeline-caller")) >= 2 * 5
+
+
+def test_raw_is_read_by_one_stage_per_batch_and_no_cache_outlives_the_run(spark, tmp_path):
+    """Every output of a batch reads its persisted 1m rollup: one stage per
+    batch reads the day's raw rows, the others read cached batches of a
+    few records each (no read-back of stored 1m rows, no second raw scan),
+    and the rollup is unpersisted when the run ends."""
+    raw_dir = str(tmp_path / "raw")
+    _raw_days(raw_dir, ["2024-01-01", "2024-01-02"], freq="15s")
+    per_day = 4 * 1440
+    persisted = _persisted(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-raw-reads", "raw reads per batch")
+    try:
+        m = _run(spark, raw_dir, str(tmp_path / "store"), batch_size=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert m["rows"]["1m"] == 2 * 2 * 1440  # two sources a minute, two days
+    records = _stage_input_records(spark, "pipeline-raw-reads")
+    assert sorted(r for r in records.values() if r >= 100) == [per_day, per_day], records
+    assert _persisted(spark) <= persisted
+
+
+def _digest(pdf):
+    """A digest of a frame's dtypes and row values."""
+    h = hashlib.sha256(repr(list(pdf.dtypes.astype(str).items())).encode())
+    h.update(pd.util.hash_pandas_object(pdf, index=False).to_numpy().tobytes())
+    return h.hexdigest()[:16]
+
+
+def test_tiers_and_lineage_of_a_fixed_input_are_pinned(spark, tmp_path):
+    """A 3-date run, then a one-day run: the rows of every tier and the
+    latest lineage rows equal those of the earlier implementation, which
+    wrote 1m first and built 1h, 1d, packed and the checksum from the 1m
+    files read back (digests and checksums taken from it)."""
+    raw_dir, out = str(tmp_path / "raw"), str(tmp_path / "store")
+    _raw_days(raw_dir, ["2024-01-01", "2024-01-02", "2024-01-03"], freq="1min")
+    _run(spark, raw_dir, out)
+    _raw_days(raw_dir, ["2024-01-04"], freq="1min", seed=3)
+    assert _run(spark, raw_dir, out)["n_partitions_pending"] == 1
+    got = {tier: _digest(_tier(out, tier)) for tier in TIERS}
+    lin = _latest_lineage(spark, out)
+    assert got == PINNED_TIERS
+    assert dict(zip(lin.index, zip(lin["n_rows"], lin["checksum"]))) == PINNED_LINEAGE
+
+
+PINNED_TIERS = {"1m": "a9495ae7a5bf65d7", "1h": "9702198f8141414e",
+                "1d": "d93810b5346da3c3", "packed": "16ff5ac6d0d62969"}
+PINNED_LINEAGE = {"2024-01-01": (1440, 702601384402808352),
+                  "2024-01-02": (1440, -5173731883927211071),
+                  "2024-01-03": (1440, -6525108127745141448),
+                  "2024-01-04": (1440, -2078552090577063194)}
