@@ -43,10 +43,12 @@ Physical plan (SURVEY.md §4.3):
   and after the write and deletes the dates the write did not replace from
   every tier, 1m last so that a crash in between leaves them to the replay.
 - Layout (``sources.table.tier_writer``): every tier file is gzip-compressed
-  and sorted within its task by ``(event_date, *key_cols, window_start)``,
-  the packed tier by ``(event_date, series_key, block_id)``, the order the
-  readers filter in. The pack exchange is clustered on the block (one
-  block is one day), so the packed tier holds one file per date.
+  Parquet v2 without dictionaries (delta-packed integers, INT64
+  timestamps), sorted within its task by ``(event_date, *key_cols,
+  window_start)``, the packed tier by ``(event_date, series_key,
+  block_id)``, the order the readers filter in. The pack exchange is
+  clustered on the block (one block is one day), so the packed tier holds
+  one file per date.
 - ``metrics["stage_s"]`` holds the wall seconds of each stage, summed over
   batches: ``pending``, each overlapped job (``1m``, ``checksum``, ``1h``,
   ``1d``, ``packed``), ``overlap`` (the section that runs them, shorter

@@ -94,6 +94,12 @@ def get_spark(
         "spark.sql.codegen.cache.maxEntries": "256",
         # Timestamps are wall-clock UTC throughout the engine.
         "spark.sql.session.timeZone": "UTC",
+        # Parquet timestamps as INT64 microseconds, not the deprecated
+        # 12-byte INT96: they delta-encode in the tier files' v2 pages and
+        # carry min/max statistics that footer readers (plans.manifest)
+        # use. Spark reads this only from the session conf; a per-write
+        # option of the same name is ignored.
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
     }

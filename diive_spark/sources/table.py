@@ -39,6 +39,21 @@ tight for the (key, window_start) and ``block_id`` filters readers use.
 gzip rather than zstd: parquet's zstd streams have finalizers, so their
 garbage survives a single full GC, and a JVM heap reading taken after one
 runs high.
+
+Pages are Parquet v2 without dictionaries, so each column chunk has one
+encoding: integers and timestamps DELTA_BINARY_PACKED, strings
+DELTA_BYTE_ARRAY, doubles and blobs PLAIN. In sorted runs neighbouring
+values differ little, so delta-packing beats a dictionary page: in a 1m
+file the sums go 17.0 → 12.4 KB and the minima 12.1 → 9.7 KB, and with
+dictionaries left on v2 pages keep 94 % of the 1m tier's bytes. One
+encoding per chunk also makes two writes of the same rows byte-identical;
+with dictionaries the order of a chunk's encoding list varied between
+writes. Timestamps are INT64 microseconds (1.26 KB per 1m timestamp column
+against 14.8 KB as INT96), but that is the session conf
+``spark.sql.parquet.outputTimestampType`` set by ``session.get_spark``:
+Spark ignores a per-write option of that name. A session built without
+``get_spark`` still writes INT96 timestamps, which read back the same but
+take more bytes; a tier may mix INT96 and INT64 days.
 """
 
 from __future__ import annotations
@@ -52,8 +67,12 @@ TIER_CODEC = "gzip"
 
 def tier_writer(df: DataFrame, sort_cols: list[str]) -> DataFrameWriter:
     """``df``'s writer in the tier layout (see the module docstring): rows
-    sorted within each task by ``sort_cols``, ``TIER_CODEC`` compression."""
-    return df.sortWithinPartitions(*sort_cols).write.option("compression", TIER_CODEC)
+    sorted within each task by ``sort_cols``, ``TIER_CODEC`` compression,
+    Parquet v2 pages without dictionaries."""
+    return (df.sortWithinPartitions(*sort_cols).write
+            .option("compression", TIER_CODEC)
+            .option("parquet.writer.version", "v2")
+            .option("parquet.enable.dictionary", "false"))
 
 
 def resolve_source(source: str) -> tuple[bool, str]:

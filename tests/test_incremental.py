@@ -3,6 +3,7 @@ the raw files' footers and the (path, size, mtime) fingerprint of the files
 covering each date, so late files and in-place rewrites reopen exactly their
 dates and a run with no new files does nothing."""
 
+import datetime as dt
 import os
 import shutil
 
@@ -245,6 +246,28 @@ def test_new_file_without_ts_statistics_is_processed(spark, tmp_path):
     m = _run(spark, raw_dir, out)
     assert _lineage_dates(spark, out, m["run_id"]) == ["2024-01-02", "2024-01-03"]
     _assert_tiers_hold_raw_tokens(raw_dir, out)
+
+
+def test_raw_file_written_by_the_engine_session_is_dated_from_its_footer(
+        spark, tmp_path, monkeypatch):
+    """``get_spark`` sessions write INT64 timestamps, which carry the min/max
+    statistics INT96 lacks, so such a raw file needs no Spark aggregate."""
+    raw_dir = str(tmp_path / "raw")
+    (spark.range(3000).coalesce(1)
+     .select(F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 86).alias("event_time"),
+             F.lit(1).alias("n_tok"), F.lit("web").alias("source"))
+     .write.parquet(raw_dir))
+    raw = spark.read.parquet(raw_dir)
+    (uri,) = raw.inputFiles()
+    assert manifest.footer_range(uri, raw.schema["event_time"], "UTC") == (
+        dt.date(2024, 1, 1), dt.date(2024, 1, 3), 3000)
+
+    def no_aggregate(*args):
+        raise AssertionError("a raw file was dated by a Spark aggregate")
+
+    monkeypatch.setattr(manifest, "aggregate_ranges", no_aggregate)
+    got = LineageStore(spark, str(tmp_path / "lineage")).pending(raw, "event_time", "1m")
+    assert got.dates == ["2024-01-01", "2024-01-02", "2024-01-03"]
 
 
 def test_corrupt_new_raw_file_is_an_error_naming_it(spark, tmp_path):

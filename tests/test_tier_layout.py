@@ -1,9 +1,12 @@
 """The tier file layout (sources/table.tier_writer): every tier file is
-gzip-compressed with its rows sorted by (key, window_start), or by
-(series_key, block_id) in the packed tier, the packed tier holds one file
-per date, and the layout survives a retention rewrite."""
+gzip-compressed Parquet with one encoding and no dictionary page per column
+chunk, INT64 microsecond timestamps and its rows sorted by (key,
+window_start), or by (series_key, block_id) in the packed tier; the packed
+tier holds one file per date, and the layout survives a retention rewrite.
+A tier that still holds INT96 days reads as one written all in INT64."""
 
 import glob
+import json
 import os
 import shutil
 
@@ -62,9 +65,18 @@ def _files(path, day="*"):
 def _assert_layout(files, order):
     for f in files:
         meta = pq.ParquetFile(f).metadata
-        codecs = {meta.row_group(g).column(c).compression
-                  for g in range(meta.num_row_groups) for c in range(meta.num_columns)}
-        assert codecs == {tbl.TIER_CODEC.upper()}, f
+        chunks = [meta.row_group(g).column(c)
+                  for g in range(meta.num_row_groups) for c in range(meta.num_columns)]
+        assert {ch.compression for ch in chunks} == {tbl.TIER_CODEC.upper()}, f
+        for ch in chunks:
+            assert len(ch.encodings) == 1, (f, ch.path_in_schema, ch.encodings)
+            assert not ch.has_dictionary_page, (f, ch.path_in_schema)
+        for col in (meta.schema.column(c) for c in range(meta.num_columns)):
+            if col.name in ("window_start", "window_end"):
+                assert col.physical_type == "INT64", (f, col.name)
+                lt = json.loads(col.logical_type.to_json())
+                assert (lt["Type"], lt["isAdjustedToUTC"], lt["timeUnit"]) == (
+                    "Timestamp", True, "microseconds"), (f, col.name, lt)
         keys = pq.read_table(f, columns=order).to_pylist()
         rows = [tuple(r[c] for c in order) for r in keys]
         assert rows == sorted(rows), f
@@ -125,4 +137,54 @@ def test_straddling_expiry_keeps_the_layout(spark, store, tmp_path):
     _assert_layout(_files(path, "2024-01-02"), ORDER["1m"])
     got = _normalised(spark.read.parquet(path).toPandas())
     want = _normalised(before[before["window_start"] >= pd.Timestamp(cutoff)])
+    pd.testing.assert_frame_equal(got, want)
+
+
+TS_TYPE = "spark.sql.parquet.outputTimestampType"
+
+
+@pytest.fixture(scope="module")
+def mixed_store(spark, tmp_path_factory):
+    """The rows of ``store``, but its first date written with INT96
+    timestamps, as stores written before tiers were INT64 hold them."""
+    base = tmp_path_factory.mktemp("mixed")
+    raw_dir, out = str(base / "raw"), str(base / "store")
+    _write_day(raw_dir, DATES[0], 0)
+    previous = spark.conf.get(TS_TYPE)
+    spark.conf.set(TS_TYPE, "INT96")
+    try:
+        pipeline.run_pipeline(spark, spark.read.parquet(raw_dir), out)
+    finally:
+        spark.conf.set(TS_TYPE, previous)
+    for i, day in enumerate(DATES[1:], 1):
+        _write_day(raw_dir, day, i)
+    assert pipeline.run_pipeline(spark, spark.read.parquet(raw_dir), out)["n_partitions_pending"] == 3
+    path = pipeline.tier_path(out, "1m")
+    kinds = {}
+    for d in DATES:
+        schema = pq.ParquetFile(_files(path, d)[0]).schema
+        kinds[d] = schema.column(schema.names.index("window_start")).physical_type
+    assert kinds == {DATES[0]: "INT96", **dict.fromkeys(DATES[1:], "INT64")}
+    return out
+
+
+def test_a_tier_mixing_int96_and_int64_days_reads_as_an_int64_build(spark, store, mixed_store):
+    want = _normalised(spark.read.parquet(pipeline.tier_path(store, "1m")).toPandas())
+    path = pipeline.tier_path(mixed_store, "1m")
+    pd.testing.assert_frame_equal(_normalised(spark.read.parquet(path).toPandas()), want)
+    got = _normalised(ds.dataset(path, format="parquet", partitioning="hive")
+                      .to_table().to_pandas())
+    pd.testing.assert_frame_equal(got[want.columns.tolist()], want, check_dtype=False)
+
+
+def test_straddling_expiry_rewrites_an_int96_day_as_int64(spark, mixed_store, tmp_path):
+    path = str(tmp_path / "1m")
+    shutil.copytree(pipeline.tier_path(mixed_store, "1m"), path)
+    before = _normalised(spark.read.parquet(path).toPandas())
+    cutoff = "2024-01-01 06:30:00"
+    tbl.expire_tier_before(spark, path, "window_start", cutoff)
+
+    _assert_layout(_files(path, DATES[0]), ORDER["1m"])
+    got = _normalised(spark.read.parquet(path).toPandas())
+    want = before[before["window_start"] >= pd.Timestamp(cutoff)].reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
