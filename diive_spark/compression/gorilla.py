@@ -1,6 +1,7 @@
 """Gorilla compression for rolled-up points: XOR float encoding +
 delta-of-delta timestamp encoding, packed per (series, time-block) into
-binary columns via vectorized Arrow grouped maps.
+binary columns via vectorized Arrow grouped maps. Integer-sourced tiers
+pack their values as exact ``(cnt, sum)`` partials instead.
 
 Scheme (Pelkonen et al., "Gorilla: A Fast, Scalable, In-Memory Time Series
 Database", VLDB 2015 — public paper):
@@ -14,7 +15,7 @@ Timestamps (int64 seconds):
         -2047 <= D <= 2048      -> '1110' + 12-bit (D + 2047)
         else                    -> '1111' + 64-bit two's-complement D
 
-Values (float64):
+Values (float64), XOR blob (``encode_values``):
     header: v[0] raw 64 bits; each subsequent XOR with previous:
         xor == 0 -> '0'
         else     -> '1' + 6-bit leading-zero count + 6-bit (siglen-1)
@@ -23,15 +24,33 @@ Values (float64):
     dropped — every nonzero XOR writes its own window. Compression is
     slightly lower; the format stays self-describing and exact.)
 
-The encoder is fully vectorized numpy (bit-matrix + boolean-mask packing, no
-per-point Python). The decoder is vectorized too, except for one Python
-step per point: it tabulates the record length at every bit position (a
-record's length is fixed by its first bits), chains the record starts
-through that table, gathers every field at once from a strided view of
-64-bit words, and rebuilds values with ``np.bitwise_xor.accumulate`` and
-timestamps with ``cumsum``. Its temporaries are a few bytes per bit of the
-blob. A blob that ends before its last record raises ``ValueError``.
-Round-trip identity is tested per block.
+Values, partials blob (``encode_partials``): a mean of integers is
+``sum / cnt``, so consecutive means are unrelated doubles that XOR cannot
+shrink; their integer partials delta-pack (FastLanes-style bit packing)
+exactly, in about a third of the bytes. Layout, all big-endian:
+    8 bytes: n with its top bit set (the tag);
+    then for cnt and then sum: one width byte w (0..64), then the n
+    values zigzag(x[i] - x[i-1]) (x[-1] = 0, int64 wrapping) packed at w
+    bits each, padded to a byte.
+A NULL sum (cnt 0) is stored as 0.
+
+Every blob starts with a 64-bit count word n < 2^63, so its first bit
+tells the two value formats apart: ``decode_values`` runs the XOR decoder
+on a clear bit and ``decode_partials`` on a set one, returning ``sum /
+cnt`` in float64 (IEEE division of the two cast to double, as Spark
+computes the stored mean) and ``np.nan`` where cnt is 0. So
+``unpack_blocks`` reads a store whose days mix both formats.
+
+The XOR encoder is fully vectorized numpy (bit-matrix + boolean-mask
+packing, no per-point Python). The XOR decoder is vectorized too, except
+for one Python step per point: it tabulates the record length at every bit
+position (a record's length is fixed by its first bits), chains the record
+starts through that table, gathers every field at once from a strided view
+of 64-bit words, and rebuilds values with ``np.bitwise_xor.accumulate``
+and timestamps with ``cumsum``. Its temporaries are a few bytes per bit of
+the blob. The partials codec has no per-point Python step. A blob that
+ends before its last record raises ``ValueError``. Round-trip identity is
+tested per block.
 """
 
 from __future__ import annotations
@@ -40,6 +59,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # ---------------------------------------------------------------------------
 # bit packing primitives (vectorized)
@@ -283,7 +303,79 @@ def _decode_xor(blob: bytes, width: int) -> np.ndarray:
 
 
 def decode_values(blob: bytes) -> np.ndarray:
+    """The float64 values of a value blob: XOR-decoded, or ``sum / cnt`` of
+    a partials blob, ``np.nan`` where cnt is 0."""
+    if blob[:1] and blob[0] & 0x80:
+        cnt, sums = decode_partials(blob)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            mean = sums.astype(np.float64) / cnt
+        mean[cnt == 0] = np.nan  # the NaN a NULL mean reads as, not 0/0's
+        return mean
     return _decode_xor(blob, 64).view(np.float64)
+
+
+# ---------------------------------------------------------------------------
+# values: exact (cnt, sum) partials
+# ---------------------------------------------------------------------------
+
+_PARTIALS_TAG = 1 << 63
+
+
+def _pack_deltas(x: np.ndarray) -> bytes:
+    """One width byte, then zigzag(x[i] - x[i-1]) (x[-1] = 0) bit-packed
+    big-endian at that width, the bit length of the largest."""
+    u = x.astype(np.int64).view(np.uint64)
+    d = u - np.concatenate([np.zeros(1, np.uint64), u[:-1]])  # wraps
+    z = (d << np.uint64(1)) ^ (d.view(np.int64) >> 63).view(np.uint64)
+    width = int(z.max()).bit_length() if len(z) else 0
+    bits = np.unpackbits(z.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
+    return bytes([width]) + np.packbits(bits[:, 64 - width:]).tobytes()
+
+
+def _unpack_deltas(blob: bytes, start: int, n: int) -> tuple[np.ndarray, int]:
+    """The ``n`` int64 values packed by ``_pack_deltas`` at byte ``start``,
+    and the byte after them."""
+    if start >= len(blob):
+        raise ValueError("truncated partials blob")
+    width = blob[start]
+    if width > 64:
+        raise ValueError("corrupt partials blob: width over 64 bits")
+    end = start + 1 + (n * width + 7) // 8
+    if end > len(blob):
+        raise ValueError("truncated partials blob")
+    words = np.zeros((n, 64), dtype=np.uint8)
+    words[:, 64 - width:] = np.unpackbits(
+        np.frombuffer(blob, np.uint8, end - start - 1, start + 1), count=n * width
+    ).reshape(n, width)
+    z = np.packbits(words, axis=1).view(">u8").ravel().astype(np.uint64)
+    d = (z >> np.uint64(1)) ^ (np.uint64(0) - (z & np.uint64(1)))
+    return np.cumsum(d, dtype=np.uint64).view(np.int64), end
+
+
+def encode_partials(cnt: np.ndarray, sums: np.ndarray) -> bytes:
+    """A value blob holding the int64 ``(cnt, sum)`` series of a block
+    exactly; ``decode_values`` reads it as ``sum / cnt``."""
+    cnt = np.asarray(cnt, dtype=np.int64)
+    sums = np.asarray(sums, dtype=np.int64)
+    if len(cnt) != len(sums):
+        raise ValueError("cnt and sum differ in length")
+    head = (len(cnt) | _PARTIALS_TAG).to_bytes(8, "big")
+    return head + _pack_deltas(cnt) + _pack_deltas(sums)
+
+
+def decode_partials(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """The int64 ``(cnt, sum)`` series of a partials blob."""
+    if len(blob) < 8:
+        raise ValueError("truncated partials blob")
+    head = int.from_bytes(blob[:8], "big")
+    if not head & _PARTIALS_TAG:
+        raise ValueError("not a partials blob")
+    n = head ^ _PARTIALS_TAG
+    cnt, pos = _unpack_deltas(blob, 8, n)
+    sums, pos = _unpack_deltas(blob, pos, n)
+    if pos != len(blob):
+        raise ValueError("corrupt partials blob: bytes after the sums")
+    return cnt, sums
 
 
 def encode_values32(vals: np.ndarray) -> bytes:
@@ -344,22 +436,37 @@ def pack_blocks(
     df: DataFrame,
     key_cols: list[str],
     ts_col: str,
-    value_col: str,
+    value_col: str | tuple[str, str],
     block_seconds: int = 86400,
     value_dtype: str = "float64",
 ) -> DataFrame:
     """Pack a rollup tier into one binary row per (key, block): Gorilla
     timestamps + values, with raw/packed byte counts for compression-ratio
     accounting. One shuffle, clustered on the block — at the rollup tiers
-    this is tiny relative to raw data. ``value_dtype='float32'`` uses the
-    half-width XOR codec (bit-exact for float32-born values; lossy vs
-    float64)."""
+    this is tiny relative to raw data. ``value_col`` is a column to
+    XOR-code, or a ``(cnt, sum)`` pair of integer partial columns to pack
+    exactly (``encode_partials``), which ``unpack_blocks`` reads back as
+    ``sum / cnt``. ``value_dtype='float32'`` XOR-codes a value column at
+    half width (bit-exact for float32-born values; lossy vs float64).
+    ``raw_bytes`` counts 16 bytes a point (12 for float32) in every
+    format."""
     blk = (F.unix_timestamp(F.col(ts_col)) / block_seconds).cast("bigint")
+    partials = not isinstance(value_col, str)
+    if partials:
+        cnt_col, sum_col = value_col
+        for c in value_col:
+            if not isinstance(df.schema[c].dataType, IntegralType):
+                raise TypeError(f"partial column {c!r} is not an integer column")
+        # a sum is NULL only where its count is 0
+        vals = [F.col(cnt_col).cast("bigint").alias("_cnt"),
+                F.coalesce(F.col(sum_col), F.lit(0)).cast("bigint").alias("_sum")]
+    else:
+        vals = [F.col(value_col).cast("double").alias("_v")]
     src = df.select(
         *key_cols,
         blk.alias("block_id"),
         F.unix_timestamp(F.col(ts_col)).alias("_ts"),
-        F.col(value_col).cast("double").alias("_v"),
+        *vals,
     )
 
     out_schema = ", ".join(
@@ -368,14 +475,18 @@ def pack_blocks(
            "raw_bytes bigint", "packed_bytes bigint"]
     )
 
-    f32 = value_dtype == "float32"
+    f32 = value_dtype == "float32" and not partials
 
     def pack(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_ts")
         ts = pdf["_ts"].to_numpy(dtype=np.int64)
-        vals = pdf["_v"].to_numpy(dtype=np.float64)
         ts_blob = encode_timestamps(ts)
-        val_blob = encode_values32(vals) if f32 else encode_values(vals)
+        if partials:
+            val_blob = encode_partials(pdf["_cnt"].to_numpy(dtype=np.int64),
+                                       pdf["_sum"].to_numpy(dtype=np.int64))
+        else:
+            vals = pdf["_v"].to_numpy(dtype=np.float64)
+            val_blob = encode_values32(vals) if f32 else encode_values(vals)
         row = {k: [keys[i]] for i, k in enumerate(key_cols)}
         row["block_id"] = [keys[len(key_cols)]]
         row.update(
@@ -403,9 +514,10 @@ def pack_blocks(
 
 def unpack_blocks(packed: DataFrame, key_cols: list[str],
                   value_dtype: str = "float64") -> DataFrame:
-    """Inverse of pack_blocks: one row per point (ts epoch seconds, value).
-    ``value_dtype`` must match the packing; float32 blobs upcast to double
-    in the output column (exactly representable)."""
+    """Inverse of pack_blocks: one row per point (ts epoch seconds, value);
+    a partials block's value is its ``sum / cnt``. ``value_dtype`` must
+    match the packing; float32 blobs upcast to double in the output column
+    (exactly representable)."""
     out_schema = ", ".join(
         [f"{c} string" for c in key_cols] + ["ts bigint", "value double"]
     )

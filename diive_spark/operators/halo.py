@@ -23,23 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def exchange_width(df: DataFrame) -> int:
-    """Partitions for an explicit exchange that feeds a Python kernel: the
-    cluster's parallelism, or ``df``'s own width when that is wider, so a
-    wide scan or checkpoint is not narrowed to the core count.
-
-    Only a plan without an exchange tells its width for free: building its
-    RDD runs no job and gives the scan splits or checkpoint partitions. A
-    plan with one runs under AQE, whose final width is known only after its
-    shuffle stages ran (``getNumPartitions`` would run them, and the
-    kernel's job again), so it gets the cluster's parallelism."""
-    sc = df.sparkSession.sparkContext
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        return sc.defaultParallelism
-    return max(sc.defaultParallelism, df.rdd.getNumPartitions())
-
-
 def explode_halo_slabs(
     df: DataFrame, ts_col: str, slab_seconds: int, halo_seconds: int,
 ) -> DataFrame:
@@ -94,8 +77,12 @@ def apply_with_halo(
     # slab through a single Python worker (r8 measurement: the whole sf1
     # gapfill cascade ran as a 1-task stage). An explicit numbered
     # repartition is exempt from AQE coalescing and satisfies the groupBy's
-    # clustering, so no second exchange is added.
-    expanded = expanded.repartition(exchange_width(df), *key_cols, "_slab")
+    # clustering, so no second exchange is added. Its width is the
+    # cluster's parallelism, whatever the input's: finding the input's own
+    # width means planning it (25-45 ms a call), and an exchange wider than
+    # the cores runs its extra tasks in later waves.
+    expanded = expanded.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, *key_cols, "_slab")
 
     out_cols = [c.strip().split()[0] for c in output_schema.split(",")]
 

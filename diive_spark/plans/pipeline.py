@@ -48,7 +48,11 @@ Physical plan (SURVEY.md §4.3):
   window_start)``, the packed tier by ``(event_date, series_key,
   block_id)``, the order the readers filter in. The pack exchange is
   clustered on the block (one block is one day), so the packed tier holds
-  one file per date.
+  one file per date. An integer value column's blocks hold its exact
+  ``(cnt, sum)`` partials, delta-packed (``gorilla.encode_partials``), and
+  decode to its means; a float column's hold its XOR-coded means. On the
+  perfbench query store (5 days x 5 sources) a packed day's file goes
+  from 33.7 KB with XOR to 20.1 KB with partials.
 - ``metrics["stage_s"]`` holds the wall seconds of each stage, summed over
   batches: ``pending``, each overlapped job (``1m``, ``checksum``, ``1h``,
   ``1d``, ``packed``), ``overlap`` (the section that runs them, shorter
@@ -74,7 +78,7 @@ from typing import Any
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType, TimestampType
+from pyspark.sql.types import IntegralType, TimestampNTZType, TimestampType
 from pyspark.util import inheritable_thread_target
 
 from diive_spark.compression import gorilla
@@ -124,14 +128,18 @@ def _write(df: DataFrame, out_dir: str, tier: str, sort_cols: list[str],
 
 
 def _write_packed(t1m: DataFrame, out_dir: str, key_cols: list[str], value_col: str) -> None:
-    """Gorilla-pack ``value_col`` of the 1m rows into one block per (key,
-    day) and overwrite those days of the packed tier."""
+    """Pack ``value_col``'s 1m series into one block per (key, day) and
+    overwrite those days of the packed tier: its exact ``(cnt, sum)``
+    partials when its sums are integers, else its XOR-coded means."""
+    cnt, total = f"{value_col}_cnt", f"{value_col}_sum"
+    values = ((cnt, total) if isinstance(t1m.schema[total].dataType, IntegralType)
+              else f"{value_col}_mean")
     # block on window_START so blocks align with the event_date batching:
     # the 23:59 window's END is midnight of d+1, which would land the day's
     # last point in a partition a later batch dynamically overwrites
     packed = gorilla.pack_blocks(
         t1m.withColumn("_k", F.concat_ws("|", *key_cols) if key_cols else F.lit("all")),
-        ["_k"], "window_start", value_col, block_seconds=86400,
+        ["_k"], "window_start", values, block_seconds=86400,
     ).withColumnRenamed("_k", "series_key")
     _write(packed, out_dir, "packed", ["series_key", "block_id"],
            F.to_date(F.timestamp_seconds(F.col("block_id") * 86400)))
@@ -227,7 +235,7 @@ def run_pipeline(
                 t1m, tier, value_cols, key_cols=key_cols), out_dir, tier, order)
         if pack_tier:
             jobs["packed"] = functools.partial(_write_packed, t1m, out_dir, key_cols,
-                                               f"{value_cols[0]}_mean")
+                                               value_cols[0])
         before = {d: set(p.files) for d, p in _partitions(out_dir, "1m", batch).items()}
         t0 = time.perf_counter()
         try:

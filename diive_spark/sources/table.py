@@ -12,9 +12,9 @@ explicit and testable as far as the environment allows:
   one call.
 - ``write_tier_table`` writes a rollup tier either to an Iceberg table
   (DataFrameWriterV2 with hidden ``days(window)`` partitioning — the
-  engine's retention/pruning unit) or to the canonical parquet layout
-  (event-time range partitioning + date directories,
-  plans/partitioning.write_partitioned). When the target is an identifier
+  engine's retention/pruning unit) or to the tier layout on a path
+  (event-time range partitioning + ``event_date`` directories, files
+  written by ``tier_writer``). When the target is an identifier
   but no Iceberg catalog is configured, the failure is wrapped with the
   exact config the cluster needs instead of a bare catalog error.
 
@@ -31,7 +31,8 @@ sibling. The deletes are idempotent and a swap cut short is settled by the
 next call, so re-running after a crash equals a clean expiry.
 
 Tier file layout. ``tier_writer`` is the one writer of tier files
-(``run_pipeline``'s tiers and the straddling-day rewrite): rows sorted
+(``run_pipeline``'s tiers, ``write_tier_table`` on a path and the
+straddling-day rewrite): rows sorted
 within each task by the tier's (keys, time) order, ``TIER_CODEC``-compressed
 column chunks. Sorted runs of one key and its timestamps compress far
 better than shuffle order, and each file's per-key min/max statistics stay
@@ -142,7 +143,9 @@ def write_tier_table(
     df: DataFrame, target: str, ts_col: str = "window_start",
     mode: str = "overwrite", n_time_ranges: int = 64,
 ) -> None:
-    """Write a rollup tier to ``target`` (catalog identifier or path)."""
+    """Write a rollup tier to ``target`` (catalog identifier or path). A
+    path gets the tier layout: ``event_date`` directories of files sorted
+    by the columns up to ``ts_col`` (keys, then the window)."""
     is_ident, target = resolve_source(target)
     if is_ident:
         try:
@@ -178,10 +181,11 @@ def write_tier_table(
                 "the engine's canonical parquet layout instead"
             ) from exc
         return
-    from diive_spark.plans.partitioning import write_partitioned
-
-    write_partitioned(df, target, ts_col, n_time_ranges=n_time_ranges,
-                      mode=mode)
+    # key columns come before the window, as in every tier (see
+    # expire_tier_before); one range of event time per task
+    ranged = df.withColumn("event_date", F.to_date(ts_col)).repartitionByRange(n_time_ranges, ts_col)
+    sort_cols = ["event_date", *df.columns[:df.columns.index(ts_col) + 1]]
+    tier_writer(ranged, sort_cols).mode(mode).partitionBy("event_date").parquet(target)
 
 
 def _settle_swaps(fs, Path, root) -> None:

@@ -5,7 +5,9 @@ Builds the perfbench ``query`` store (its generated raw days for one seed,
 then one ``run_pipeline``) twice, each in its own Python process and Spark
 session, and compares every tier partition (``tier=<t>/event_date=<d>``)
 by the SHA-256 of its files' contents; file names hold a random UUID, so
-they are not compared. Exits 1 when some partition differs.
+they are not compared. Also prints each tier's stored bytes per date (the
+mean over its dates, in the first build). Exits 1 when some partition
+differs.
 
     python3 scripts/check_tier_bytes.py [--seed N]
 """
@@ -25,8 +27,9 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def build(work: str, seed: int) -> dict[str, str]:
-    """Build the store under ``work``; {partition: digest of its files}."""
+def build(work: str, seed: int) -> dict[str, tuple[str, int]]:
+    """Build the store under ``work``; {partition: (digest of its files,
+    their bytes)}."""
     sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
     from workloads import Query
 
@@ -40,9 +43,11 @@ def build(work: str, seed: int) -> dict[str, str]:
     spark.stop()
     digests = {}
     for part in sorted(glob.glob(os.path.join(wl.store(), "tier=*", "event_date=*"))):
-        files = sorted(hashlib.sha256(pathlib.Path(f).read_bytes()).hexdigest()
-                       for f in glob.glob(os.path.join(part, "*.parquet")))
-        digests[os.path.relpath(part, wl.store())] = hashlib.sha256("".join(files).encode()).hexdigest()
+        paths = glob.glob(os.path.join(part, "*.parquet"))
+        files = sorted(hashlib.sha256(pathlib.Path(f).read_bytes()).hexdigest() for f in paths)
+        digests[os.path.relpath(part, wl.store())] = (
+            hashlib.sha256("".join(files).encode()).hexdigest(),
+            sum(os.path.getsize(f) for f in paths))
     return digests
 
 
@@ -59,7 +64,12 @@ def main() -> int:
             [sys.executable, __file__, "--seed", str(args.seed), "--build", os.path.join(tmp, name)],
             check=True, capture_output=True, text=True).stdout.splitlines()[-1])
             for name in ("a", "b"))
-    same = [p for p in a if a[p] == b.get(p)]
+    per_tier: dict[str, list[int]] = {}
+    for part, (_, size) in a.items():
+        per_tier.setdefault(part.split(os.sep)[0], []).append(size)
+    for tier, sizes in sorted(per_tier.items()):
+        print(f"{tier}: {sum(sizes) / len(sizes):,.0f} B per date over {len(sizes)} dates")
+    same = [p for p in a if a[p][0] == b.get(p, ("",))[0]]
     print(f"{len(same)} of {len(a)} tier partitions byte-identical"
           + ("" if a.keys() == b.keys() else f"; partition sets differ: {sorted(a.keys() ^ b.keys())}"))
     for p in sorted(a.keys() - set(same)):

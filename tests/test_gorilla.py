@@ -356,3 +356,170 @@ def test_pack_exchange_is_one_block_per_task_at_the_core_count(spark, tier_df, w
         lambda rows: [sorted({r["block_id"] for r in rows})]).collect()
     blocks = [b for task in per_task for b in task]
     assert len(blocks) == len(set(blocks)) == 3  # no block split over two tasks
+
+
+# ---------------- exact (cnt, sum) partials ----------------
+
+_I64 = st.integers(min_value=-2**63, max_value=2**63 - 1)
+_NAN_BITS = np.array(np.nan).view(np.uint64)
+
+
+def oracle_partials(blob: bytes) -> list[list[int]]:
+    """The (cnt, sum) series of a partials blob, read one bit at a time."""
+    r = _BitReader(blob)
+    assert r.read(1) == 1
+    n = r.read(63)
+    series = []
+    for _ in range(2):
+        width = r.read(8)
+        x, out = 0, []
+        for _ in range(n):
+            z = r.read(width)
+            x = _to_i64((x + ((z >> 1) ^ -(z & 1))) % (1 << 64))
+            out.append(x)
+        r.pos += -r.pos % 8  # each series ends on a byte
+        series.append(out)
+    assert r.pos == 8 * len(blob)
+    return series
+
+
+def _assert_partials_round_trip(cnt, sums):
+    cnt, sums = np.asarray(cnt, dtype=np.int64), np.asarray(sums, dtype=np.int64)
+    blob = gorilla.encode_partials(cnt, sums)
+    assert blob[0] & 0x80  # the tag: XOR blobs never set the count's top bit
+    assert oracle_partials(blob) == [cnt.tolist(), sums.tolist()]
+    got_cnt, got_sums = gorilla.decode_partials(blob)
+    assert got_cnt.dtype == got_sums.dtype == np.int64
+    np.testing.assert_array_equal(got_cnt, cnt)
+    np.testing.assert_array_equal(got_sums, sums)
+    return blob
+
+
+@given(st.lists(st.tuples(_I64, _I64), max_size=60))
+@settings(max_examples=60, deadline=None)
+def test_partials_property_round_trip(pairs):
+    _assert_partials_round_trip([c for c, _ in pairs], [s for _, s in pairs])
+
+
+def test_partials_extremes_and_wrapping_deltas():
+    lo, hi = -2**63, 2**63 - 1
+    ext = [lo, hi, lo, hi, 0, -1, hi, 0, lo, lo + 1, hi - 1, 1]
+    # every delta between neighbours here wraps in int64
+    _assert_partials_round_trip(ext, ext[::-1])
+    blob = _assert_partials_round_trip([hi] * 5, [lo] * 5)
+    assert blob[8] == 64  # the first value's zigzag needs all 64 bits
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_partials_short_blocks(n):
+    blob = _assert_partials_round_trip([3] * n, [11] * n)
+    np.testing.assert_array_equal(gorilla.decode_values(blob), [11 / 3] * n)
+
+
+def test_partials_decode_to_sum_over_cnt_bit_for_bit():
+    rng = np.random.default_rng(2)
+    cnt = rng.integers(1, 60, 1440)
+    sums = cnt * rng.integers(1, 1000, 1440) + rng.integers(0, 999, 1440)
+    sums[:3] = [2**62 + 1, -(2**62) - 3, 2**53 + 1]  # not exact as doubles
+    got = gorilla.decode_values(gorilla.encode_partials(cnt, sums))
+    want = np.array([float(s) / float(c) for c, s in zip(cnt.tolist(), sums.tolist())])
+    np.testing.assert_array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
+def test_partials_with_no_count_decode_to_nan():
+    """A window whose values were all NULL (cnt 0, NULL sum stored as 0)
+    decodes to np.nan's bits, the NaN a NULL mean reads as in pandas, not
+    to 0/0, whose sign bit is set."""
+    got = gorilla.decode_values(gorilla.encode_partials([0, 4, 0], [0, 10, 0]))
+    assert got.view(np.uint64).tolist() == [_NAN_BITS, np.float64(2.5).view(np.uint64), _NAN_BITS]
+
+
+def test_truncated_partials_blob_raises():
+    rng = np.random.default_rng(8)
+    for blob in (gorilla.encode_partials(rng.integers(1, 9, 300), rng.integers(0, 10**6, 300)),
+                 gorilla.encode_partials([], [])):
+        for cut in range(len(blob)):
+            for decode in (gorilla.decode_partials, gorilla.decode_values):
+                with pytest.raises(ValueError):
+                    decode(blob[:cut])
+        with pytest.raises(ValueError):
+            gorilla.decode_partials(blob + b"\0")
+
+
+@pytest.fixture(scope="module")
+def int_tier(spark):
+    """A 1m rollup of two days of integer raw values from two sources; one
+    window holds only NULL values (cnt 0, NULL sum and mean)."""
+    from diive_spark.operators import resample
+
+    rng = np.random.default_rng(6)
+    n = 8000
+    ts = pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.integers(0, 2 * 86400, n), "s")
+    vals = pd.array(rng.integers(1, 5000, n), dtype="Int64")
+    vals[ts.floor("min") == pd.Timestamp("2024-01-01 00:00")] = pd.NA
+    first = pd.DataFrame({"source": "web", "event_time": [pd.Timestamp("2024-01-01 00:00:30")],
+                          "n_tok": pd.array([pd.NA], dtype="Int64")})
+    raw = pd.concat([first, pd.DataFrame({"source": rng.choice(["web", "code"], n),
+                                          "event_time": ts, "n_tok": vals})])
+    df = spark.createDataFrame(raw, "source string, event_time timestamp, n_tok bigint")
+    return resample.rollup(df, "event_time", ["n_tok"], "1m", key_cols=["source"]).cache()
+
+
+def _means(t1m):
+    """{(source, epoch s): n_tok_mean bits} of a 1m rollup, as Spark computed it."""
+    pdf = t1m.toPandas()
+    return dict(zip(zip(pdf["source"], pdf["window_start"].astype("int64") // 10**9),
+                    pdf["n_tok_mean"].to_numpy(np.float64).view(np.uint64).tolist()))
+
+
+def _unpacked(packed):
+    pdf = gorilla.unpack_blocks(packed, ["source"]).toPandas()
+    return dict(zip(zip(pdf["source"], pdf["ts"]),
+                    pdf["value"].to_numpy(np.float64).view(np.uint64).tolist()))
+
+
+def test_pack_unpack_round_trip_of_an_integer_tier(int_tier):
+    packed = gorilla.pack_blocks(int_tier, ["source"], "window_start",
+                                 ("n_tok_cnt", "n_tok_sum")).cache()
+    xor = gorilla.pack_blocks(int_tier, ["source"], "window_start", "n_tok_mean")
+    got = _unpacked(packed)
+    want = _means(int_tier)
+    assert got == want
+    assert _NAN_BITS in got.values()  # the all-NULL window
+    stats = packed.selectExpr("sum(n_points) n", "sum(raw_bytes) r", "sum(packed_bytes) p").first()
+    assert stats["r"] == 16 * stats["n"] == 16 * len(want)
+    assert stats["p"] < 0.8 * xor.selectExpr("sum(packed_bytes)").first()[0]
+    for row in packed.select("n_points", "val_blob").collect():
+        cnt, _ = gorilla.decode_partials(bytes(row["val_blob"]))
+        assert len(cnt) == row["n_points"]
+
+
+def test_partials_need_integer_columns(int_tier):
+    with pytest.raises(TypeError, match="n_tok_mean"):
+        gorilla.pack_blocks(int_tier, ["source"], "window_start", ("n_tok_cnt", "n_tok_mean"))
+
+
+def test_a_store_mixing_xor_and_partials_days_decodes_to_the_1m_means(spark, int_tier, tmp_path):
+    """Day one packed as XOR-coded means (the older format), day two as
+    partials: ``unpack_blocks`` and ``decode_values`` read both."""
+    from pyspark.sql import functions as F
+
+    day = F.to_date("window_start").cast("string")
+    one = int_tier.filter(day == "2024-01-01")
+    two = int_tier.filter(day == "2024-01-02")
+    path = str(tmp_path / "packed")
+    gorilla.pack_blocks(one, ["source"], "window_start", "n_tok_mean").write.parquet(path)
+    gorilla.pack_blocks(two, ["source"], "window_start", ("n_tok_cnt", "n_tok_sum")) \
+        .write.mode("append").parquet(path)
+    stored = spark.read.parquet(path)
+    blocks = stored.select("source", "block_id", "ts_blob", "val_blob").collect()
+    assert sorted((r["block_id"], bytes(r["val_blob"])[0] >> 7) for r in blocks) == [
+        (19723, 0), (19723, 0), (19724, 1), (19724, 1)]
+    want = _means(int_tier)
+    assert _unpacked(stored) == want
+    decoded = {}
+    for r in blocks:
+        ts = gorilla.decode_timestamps(bytes(r["ts_blob"]))
+        vals = gorilla.decode_values(bytes(r["val_blob"]))
+        decoded.update(zip(zip([r["source"]] * len(ts), ts.tolist()), vals.view(np.uint64).tolist()))
+    assert decoded == want

@@ -455,17 +455,16 @@ def test_fused_cascade_plan_is_single_python_stage(spark):
 
 
 @pytest.mark.parametrize("width", [1, 16])
-def test_halo_exchange_never_narrows_its_input(spark, width):
-    """The slab exchange is at least the core count wide, and an input
-    already wider than that (here a checkpoint) keeps its width."""
+def test_halo_exchange_is_the_core_count_wide(spark, width):
+    """The slab exchange is the core count wide whatever the input's width
+    (here a checkpoint of 1 or 16 partitions), and it keeps every row."""
     from diive_spark.operators.halo import apply_with_halo
 
     df = _toy_grid(spark, [float(i) for i in range(200)]).repartition(width).localCheckpoint()
     out = apply_with_halo(df, ["series"], "window_start", lambda pdf: pdf,
                           "series string, window_start timestamp, value double",
                           slab_seconds=20 * 3600, halo_seconds=3 * 3600)
-    want = max(width, spark.sparkContext.defaultParallelism)
-    assert out.rdd.getNumPartitions() == want
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r["value"] for r in out.collect()) == [float(i) for i in range(200)]
 
 

@@ -188,3 +188,31 @@ def test_straddling_expiry_rewrites_an_int96_day_as_int64(spark, mixed_store, tm
     got = _normalised(spark.read.parquet(path).toPandas())
     want = before[before["window_start"] >= pd.Timestamp(cutoff)].reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_a_tier_written_to_a_path_has_the_tier_layout(spark, tmp_path):
+    """``write_tier_table`` on a path writes through ``tier_writer``:
+    gzip, v2 pages (integers DELTA_BINARY_PACKED), no dictionaries, each
+    file sorted by (keys, window_start), in event_date directories."""
+    rng = np.random.default_rng(4)
+    n = 2000
+    pdf = pd.DataFrame({
+        "source": rng.choice(["web", "code", "chat"], n),
+        "window_start": pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.permutation(n) * 180, "s"),
+        "n_tok_cnt": rng.integers(1, 50, n),
+    })
+    path = str(tmp_path / "tier")
+    tbl.write_tier_table(spark.createDataFrame(pdf), path, "window_start")
+    files = _files(path)
+    _assert_layout(files, ["source", "window_start"])
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for g in range(meta.num_row_groups):
+            chunk = {meta.row_group(g).column(c).path_in_schema: meta.row_group(g).column(c)
+                     for c in range(meta.num_columns)}["n_tok_cnt"]
+            assert chunk.encodings == ("DELTA_BINARY_PACKED",), (f, chunk.encodings)
+    days = sorted(os.path.basename(os.path.dirname(f)) for f in files)
+    assert days[0] == "event_date=2024-01-01" and days[-1] == "event_date=2024-01-05"
+    got = spark.read.parquet(path).toPandas()
+    assert len(got) == n
+    assert (got["event_date"].astype(str) == got["window_start"].dt.strftime("%Y-%m-%d")).all()
