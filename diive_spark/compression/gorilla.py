@@ -425,6 +425,8 @@ def encode_values32(vals: np.ndarray) -> bytes:
 
 def decode_values32(blob: bytes) -> np.ndarray:
     """Inverse of encode_values32; returns float32."""
+    if blob[:1] and blob[0] & 0x80:
+        raise ValueError("a partials blob is not a float32 value blob")
     return _decode_xor(blob, 32).astype(np.uint32).view(np.float32)
 
 
@@ -447,7 +449,8 @@ def pack_blocks(
     XOR-code, or a ``(cnt, sum)`` pair of integer partial columns to pack
     exactly (``encode_partials``), which ``unpack_blocks`` reads back as
     ``sum / cnt``. ``value_dtype='float32'`` XOR-codes a value column at
-    half width (bit-exact for float32-born values; lossy vs float64).
+    half width (bit-exact for float32-born values; lossy vs float64);
+    partials are packed at 64 bits only (a ``ValueError`` otherwise).
     ``raw_bytes`` counts 16 bytes a point (12 for float32) in every
     format."""
     blk = (F.unix_timestamp(F.col(ts_col)) / block_seconds).cast("bigint")
@@ -457,6 +460,9 @@ def pack_blocks(
         for c in value_col:
             if not isinstance(df.schema[c].dataType, IntegralType):
                 raise TypeError(f"partial column {c!r} is not an integer column")
+        if value_dtype != "float64":
+            raise ValueError("(cnt, sum) partials are packed at 64 bits; "
+                             f"value_dtype={value_dtype!r} applies to XOR only")
         # a sum is NULL only where its count is 0
         vals = [F.col(cnt_col).cast("bigint").alias("_cnt"),
                 F.coalesce(F.col(sum_col), F.lit(0)).cast("bigint").alias("_sum")]
@@ -475,7 +481,7 @@ def pack_blocks(
            "raw_bytes bigint", "packed_bytes bigint"]
     )
 
-    f32 = value_dtype == "float32" and not partials
+    f32 = value_dtype == "float32"
 
     def pack(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_ts")

@@ -69,22 +69,6 @@ def salted_repartition(
     return salted.repartition(max(total_buckets, 1), key_col, "salt")
 
 
-def write_partitioned(
-    df: DataFrame, path: str, ts_col: str,
-    n_time_ranges: int = 64, mode: str = "overwrite",
-) -> None:
-    """The engine's canonical raw-table layout: event-time RANGE partitioning
-    (window locality — measured 0.10 -> ~0.7 scaling efficiency in
-    BENCH/BASELINE.md) with date directory partitioning for pruning."""
-    (
-        df.withColumn("event_date", F.to_date(ts_col))
-        .repartitionByRange(n_time_ranges, ts_col)
-        .write.mode(mode)
-        .partitionBy("event_date")
-        .parquet(path)
-    )
-
-
 def write_bucketed(
     df: DataFrame, table_name: str, bucket_cols: list[str], n_buckets: int,
     sort_cols: list[str] | None = None, mode: str = "overwrite",

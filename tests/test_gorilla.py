@@ -499,6 +499,14 @@ def test_partials_need_integer_columns(int_tier):
         gorilla.pack_blocks(int_tier, ["source"], "window_start", ("n_tok_cnt", "n_tok_mean"))
 
 
+def test_partials_are_packed_and_read_at_64_bits_only(int_tier):
+    with pytest.raises(ValueError, match="float32"):
+        gorilla.pack_blocks(int_tier, ["source"], "window_start",
+                            ("n_tok_cnt", "n_tok_sum"), value_dtype="float32")
+    with pytest.raises(ValueError, match="partials"):
+        gorilla.decode_values32(gorilla.encode_partials([1, 2], [5, 7]))
+
+
 def test_a_store_mixing_xor_and_partials_days_decodes_to_the_1m_means(spark, int_tier, tmp_path):
     """Day one packed as XOR-coded means (the older format), day two as
     partials: ``unpack_blocks`` and ``decode_values`` read both."""

@@ -19,6 +19,7 @@ from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from diive_spark.plans import manifest, pipeline
 from diive_spark.plans.lineage import LineageStore
+from tests.status_store import stage_input_records
 
 TIERS = ["1m", "1h", "1d", "packed"]
 
@@ -301,16 +302,7 @@ def test_new_days_read_only_their_own_raw_rows(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert m["n_partitions_pending"] == 2
-    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    jobs = tracker.getJobIdsForGroup("incremental-new-days")
-    stages = [store.stageData(sid, False, sc._gateway.jvm.java.util.ArrayList(), False,
-                              sc._gateway.new_array(sc._gateway.jvm.double, 0))
-              for job in jobs for sid in tracker.getJobInfo(job).stageIds]
-    # past spark.ui.retainedStages the status store evicts skipped stages
-    # (which read nothing) first, so a long session may have lost some
-    lost = sum(1 for st in stages if st.isEmpty())
-    assert lost <= sum(store.job(job).numSkippedStages() for job in jobs)
-    records = sum(st.apply(0).inputRecords() for st in stages if not st.isEmpty())
+    records = sum(stage_input_records(spark, "incremental-new-days").values())
     assert 2 * per_day <= records < 4 * per_day
 
 

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from diive_spark import synth
 from diive_spark.plans import partitioning
+from diive_spark.sources.table import write_tier_table
 
 
 @pytest.fixture(scope="module")
@@ -39,9 +40,7 @@ def test_salted_repartition_balances(spark, tokens):
 
 def test_write_partitioned_layout(spark, tokens, tmp_path):
     out = str(tmp_path / "ranged")
-    partitioning.write_partitioned(
-        synth.with_event_time(tokens), out, "event_time", n_time_ranges=8
-    )
+    write_tier_table(synth.with_event_time(tokens), out, "event_time", n_time_ranges=8)
     back = spark.read.parquet(out)
     assert back.count() == 20_000
     # date-partition pruning: a one-day filter scans only that directory

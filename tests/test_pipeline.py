@@ -76,6 +76,26 @@ def test_packed_tier_is_complete(spark, raw, tmp_path_factory):
     assert n_points == t1m.count()
 
 
+def test_a_double_value_column_packs_as_xor_means(spark, raw, tmp_path_factory):
+    """A float source's sums are not integers, so its packed blocks hold
+    XOR-coded means, without the partials tag, that decode to the 1m
+    tier's means bit for bit."""
+    from diive_spark.compression import gorilla
+
+    out = str(tmp_path_factory.mktemp("packed_double"))
+    pipeline.run_pipeline(spark, raw.withColumn("n_tok", F.col("n_tok").cast("double")),
+                          out, batch_size=15)
+    t1m = spark.read.parquet(pipeline.tier_path(out, "1m")).toPandas()
+    assert str(t1m["n_tok_sum"].dtype) == "float64"
+    packed = spark.read.parquet(pipeline.tier_path(out, "packed"))
+    assert not any(bytes(r["val_blob"])[0] & 0x80 for r in packed.select("val_blob").collect())
+    got = gorilla.unpack_blocks(packed, ["series_key"]).toPandas()
+    want = dict(zip(zip(t1m["source"], t1m["window_start"].astype("int64") // 10**9),
+                    t1m["n_tok_mean"].to_numpy(np.float64).view(np.uint64).tolist()))
+    assert dict(zip(zip(got["series_key"], got["ts"]),
+                    got["value"].to_numpy(np.float64).view(np.uint64).tolist())) == want
+
+
 def test_select_records_to_code_logs_query_text(spark, tmp_path):
     """select_records_to_code: filter + replayable SQL text in lineage."""
     import pandas as pd

@@ -18,6 +18,7 @@ import pytest
 from diive_spark.compression import gorilla
 from diive_spark.plans import pipeline
 from diive_spark.plans.lineage import LineageStore
+from tests.status_store import stage_input_records
 
 TIERS = ["1m", "1h", "1d", "packed"]
 
@@ -61,22 +62,6 @@ def _persisted(spark):
     """Ids of the RDDs the session holds persisted. Spark's context cleaner
     may release an earlier one meanwhile, so a run may only shrink this."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
-def _stage_input_records(spark, group):
-    """{stage id: input records} of the stages of ``group``'s jobs. Past
-    ``spark.ui.retainedStages`` the status store evicts skipped stages
-    first, so a long session loses some; a stage it lost counts 0 records,
-    and there must be no more of them than the jobs skipped."""
-    sc = spark.sparkContext
-    tracker, store, gw = sc.statusTracker(), sc._jsc.sc().statusStore(), sc._gateway
-    jobs = tracker.getJobIdsForGroup(group)
-    stages = {sid for job in jobs for sid in tracker.getJobInfo(job).stageIds}
-    data = {sid: store.stageData(sid, False, gw.jvm.java.util.ArrayList(), False,
-                                 gw.new_array(gw.jvm.double, 0)) for sid in stages}
-    lost = [sid for sid, d in data.items() if d.isEmpty()]
-    assert len(lost) <= sum(store.job(job).numSkippedStages() for job in jobs), lost
-    return {sid: 0 if d.isEmpty() else d.apply(0).inputRecords() for sid, d in data.items()}
 
 
 def test_stage_seconds_cover_every_stage(spark, tmp_path):
@@ -168,7 +153,7 @@ def test_raw_is_read_by_one_stage_per_batch_and_no_cache_outlives_the_run(spark,
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert m["rows"]["1m"] == 2 * 2 * 1440  # two sources a minute, two days
-    records = _stage_input_records(spark, "pipeline-raw-reads")
+    records = stage_input_records(spark, "pipeline-raw-reads")
     assert sorted(r for r in records.values() if r >= 100) == [per_day, per_day], records
     assert _persisted(spark) <= persisted
 
